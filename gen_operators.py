@@ -3,10 +3,10 @@
 
 The coverage ledger used to be hand-maintained prose in SURVEY §8 and
 drifted at least once; this script derives it mechanically — one row per
-registered key with its check mode (oracle / rows-only), defining
-file:line, tags, and the driver round that first hash-verified it —
-and `tests/test_registry_doc.py` pins OPERATORS.md == regenerated text
-so the ledger can never drift from the registry again.
+registered key with its check mode (oracle / rows-only), builder
+module:function (never a line number), tags, and its first green driver
+round (`__spark_entry__.green_rounds`) — and `tests/test_registry_doc.py`
+pins OPERATORS.md == regenerated text so the ledger can never drift.
 
 Run from the repo root: `python gen_operators.py`.
 """
@@ -17,26 +17,15 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
 _REPO = os.path.dirname(os.path.abspath(__file__))
-
-
-def _driver_rounds() -> dict[str, str]:
-    import __spark_entry__ as entry
-
-    rounds: dict[str, str] = {}
-    for attr in sorted(d for d in dir(entry) if d.endswith("_VERIFIED") and d.startswith("_R")):
-        tag = attr[1:4].lower()  # _R01_VERIFIED -> r01
-        for key in getattr(entry, attr):
-            rounds.setdefault(key, tag)
-    return rounds
+sys.path.insert(0, _REPO)
 
 
 def render() -> str:
+    from __spark_entry__ import green_rounds
     from week3_2_practice_big_data__spark import REGISTRY
 
-    rounds = _driver_rounds()
+    green = green_rounds()
     lines = [
         "# Operator registry ledger (generated — do not edit)",
         "",
@@ -44,7 +33,7 @@ def render() -> str:
         "`tests/test_registry_doc.py` asserts this file is in sync. One row",
         "per registered key: check mode (`oracle` = DuckDB value-hash gate,",
         "`rows-only` = error/row-count/schema signal by design), the",
-        "builder's `file:line`, registry tags, and the first driver round",
+        "builder's `module:function`, registry tags, and the first driver round",
         "whose CORRECTNESS artifact verified the key (`pending` = awaiting",
         "its first driver window; such keys are still pytest-replayed",
         "against their oracle at sf0.001 and swept at sf0.01).",
@@ -55,18 +44,17 @@ def render() -> str:
         f"**{len(REGISTRY)} keys: {n_oracle} oracle-checked, "
         f"{len(REGISTRY) - n_oracle} rows-only.**",
         "",
-        "| key | check | file:line | tags | driver |",
+        "| key | check | module:function | tags | driver |",
         "|---|---|---|---|---|",
     ]
     for key in sorted(REGISTRY):
         q = REGISTRY[key]
         fn = inspect.unwrap(q.builder)
-        src = os.path.relpath(inspect.getsourcefile(fn), _REPO)
-        line = inspect.getsourcelines(fn)[1]
         mode = "oracle" if q.oracle is not None else "rows-only"
+        first = green[key][0] if key in green else "pending"
         lines.append(
-            f"| {key} | {mode} | {src}:{line} | {', '.join(q.tags)} "
-            f"| {rounds.get(key, 'pending')} |"
+            f"| {key} | {mode} | {fn.__module__}:{fn.__qualname__} "
+            f"| {', '.join(q.tags)} | {first} |"
         )
     lines.append("")
     return "\n".join(lines)

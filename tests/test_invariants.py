@@ -1511,3 +1511,44 @@ def test_pandas_on_spark_null_group_keys_match_sql(spark):
     flags = [(r["l_returnflag"], r["l_linestatus"]) for r in got.collect()]
     assert (None, None) in flags and (None, "O") in flags and ("N", None) in flags
     compare(got, duck_run(q.oracle, out), "qry_pandas_on_spark:nullkey")
+
+
+def test_local_rows_df_parses_parameterized_ddl_and_checks_arity(spark):
+    """local_rows_df takes the DDL through Spark's parser, so a type with
+    commas inside (decimal(10,2), map<…>) stays one field, and a row whose
+    arity differs from the schema raises instead of being truncated."""
+    from decimal import Decimal
+
+    import pytest
+
+    from week3_2_practice_big_data__spark.common import local_rows_df
+
+    ddl = "k string, amount decimal(10,2), tags map<string,int>, n bigint"
+    df = local_rows_df(spark, ddl, [("a", Decimal("12.34"), None, 7), ("b", None, None, None)])
+    assert df.schema.simpleString() == (
+        "struct<k:string,amount:decimal(10,2),tags:map<string,int>,n:bigint>"
+    )
+    assert sorted(df.collect()) == [("a", Decimal("12.34"), None, 7), ("b", None, None, None)]
+    with pytest.raises(ValueError, match="2 values"):
+        local_rows_df(spark, ddl, [("a", Decimal("1.00"))])
+
+
+def test_graph_keys_leave_no_temp_views(spark):
+    """The graph builders' edge-list views (tri_edges, bip_edges and the
+    capped view) are scoped to the builder call: after every graph key
+    runs, the session's temp views are what they were. The base tables
+    are registered under their own names first, as any query over them
+    would."""
+    from week3_2_practice_big_data__spark.io import register_views
+
+    def temp_views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    register_views(spark, SF_SMALL)
+    before = temp_views()
+    for q in REGISTRY.values():
+        if "graph" in q.tags:
+            q.builder(spark, SF_SMALL).collect()
+    after = temp_views()
+    assert after == before
+    assert not [v for v in after if v.startswith(("tri_edges", "bip_edges"))]

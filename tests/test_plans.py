@@ -548,9 +548,14 @@ def test_chunk_overlap_single_exchange(spark):
     """The stride chunker is a map-side explode: the ONLY exchange in the
     plan is the presentation sort — per-doc token arrays never cross a
     shuffle boundary."""
+    import re
+
     df = REGISTRY["ns_chunk_overlap"].builder(spark, SF_SMALL)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
+    # every exchange-like operator (Exchange, BroadcastExchange,
+    # ReusedExchange, ...) with its first argument word
+    exchanges = re.findall(r"(\w*Exchange)\b ?(\w*)", plan)
+    assert exchanges == [("Exchange", "rangepartitioning")], exchanges
     assert "Join" not in plan
     assert "Generate" in plan  # the explode
 
@@ -935,11 +940,14 @@ def test_bfs_round_plan_equi_joins_only(spark):
         _BFS_SEEDS_SQL,
         _BFS_UND_SQL,
         _bfs_expand,
+        _bip_edges,
+        _scoped_view,
     )
 
-    # builder run primes the bip_edges checkpoint + views
+    # builder run primes the bip_edges checkpoint + base-table views
     REGISTRY["iter_bfs_sssp"].builder(spark, SF_SMALL).collect()
-    und = spark.sql(f"WITH bip AS (SELECT p, s FROM bip_edges) {_BFS_UND_SQL}")
+    with _scoped_view(_bip_edges(spark, SF_SMALL), "bip_edges") as edges:
+        und = spark.sql(f"WITH bip AS (SELECT p, s FROM {edges}) {_BFS_UND_SQL}")
     frontier = spark.sql(_BFS_SEEDS_SQL)
     new = _bfs_expand(und, frontier, frontier.select("node"))
     plan = new._jdf.queryExecution().executedPlan().toString()
@@ -1180,11 +1188,34 @@ def _plan_tree(plan: str) -> list[str]:
     return tree
 
 
-def _first_line(tree: list[str], token: str) -> int:
+def _tree_node(line: str) -> tuple[str, str] | None:
+    """(operator name, node id) of one plan-tree line, e.g.
+    '   +- Exchange (3)' -> ('Exchange', '3')."""
+    import re
+
+    m = re.fullmatch(r"[\s+\-:]*(.+?)\s+\((\d+)\)", line)
+    return (m.group(1), m.group(2)) if m else None
+
+
+def _first_line(tree: list[str], name: str) -> int:
+    """Index of the first tree line whose operator is exactly ``name`` — so
+    'Sort' never binds to SortMergeJoin / SortAggregate, nor 'Exchange' to
+    BroadcastExchange."""
     for i, ln in enumerate(tree):
-        if token in ln:
+        node = _tree_node(ln)
+        if node and node[0] == name:
             return i
-    raise AssertionError(f"{token!r} not in plan tree:\n" + "\n".join(tree))
+    raise AssertionError(f"{name!r} not in plan tree:\n" + "\n".join(tree))
+
+
+def _exchange_kind(plan: str, tree_line: str) -> str:
+    """The partitioning explain('formatted') prints for the Exchange node on
+    ``tree_line``, e.g. 'rangepartitioning'."""
+    import re
+
+    node_id = _tree_node(tree_line)[1]
+    m = re.search(rf"^\({node_id}\) Exchange\n(?:.+\n)*?Arguments: (\w+)", plan, re.M)
+    return m.group(1) if m else ""
 
 
 def test_presorted_python_stages_keep_sort_below_python(spark):
@@ -1208,6 +1239,8 @@ def test_presorted_python_stages_keep_sort_below_python(spark):
         py = _first_line(tree, node)
         sort = _first_line(tree, "Sort")
         exch = _first_line(tree, "Exchange")
+        # the exchange under the sort is the deterministic-output one
+        assert _exchange_kind(plan, tree[exch]) == "rangepartitioning", (key, plan)
         # tree line index grows toward the scan: the Python node must be
         # NEARER the root than the sort/exchange that orders its input
         assert py < sort < exch, (key, tree)
@@ -1215,8 +1248,6 @@ def test_presorted_python_stages_keep_sort_below_python(spark):
         assert not any(
             "Sort" in ln or "Exchange" in ln for ln in tree[:py]
         ), (key, tree)
-        # the rangepartitioning exchange is the deterministic-output one
-        assert "rangepartitioning" in plan, key
 
 
 def test_checkpointed_python_stages_hide_python_below_the_sort(spark):
@@ -1238,7 +1269,7 @@ def test_checkpointed_python_stages_hide_python_below_the_sort(spark):
             ("Python" in ln) or ("MapInArrow" in ln) or ("Pandas" in ln)
             for ln in tree
         ), (key, tree)
-        assert _first_line(tree, "Sort") < _first_line(tree, "ExistingRDD"), (
+        assert _first_line(tree, "Sort") < _first_line(tree, "Scan ExistingRDD"), (
             key,
             tree,
         )

@@ -8,6 +8,7 @@ Spark builder and stays in lockstep with the DuckDB oracle texts.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 # Money values are cast to DECIMAL(18,2) before summing: decimal sums are
 # exact in both Spark and DuckDB, so the value-hash gate sees identical
@@ -158,21 +159,24 @@ def local_rows_df(spark, schema_ddl: str, rows):
     dq_observe_metrics in-bench anomaly: the bench prefix leaves no idle
     worker, so every pass re-spawned one). Building the same rows as
     literal columns over ``spark.range(1)`` + UNION keeps the relation
-    JVM-only (~0.08 s per action) — same values, same schema (the
-    ``when(True, …)`` wrapper pins every field nullable, matching
-    createDataFrame's DDL-schema nullability).
+    JVM-only (~0.08 s per action) — same values, same column names and
+    types. Nullability differs: a column that is non-NULL in every row
+    comes out non-nullable despite the ``when(True, …)`` wrapper (seen on
+    Spark 4.1), where createDataFrame marks every DDL field nullable.
 
-    Scalars only (int/float/str/bool/None); use createDataFrame for
-    anything nested or larger than a few hundred rows.
+    Scalars only (int/float/str/bool/None/Decimal); use createDataFrame
+    for anything nested or larger than a few hundred rows. Spark parses
+    the DDL (so ``decimal(10,2)`` stays one field); a row whose arity
+    differs from the schema's raises ``ValueError``.
     """
-    import pyspark.sql.functions as F
-
-    fields = []
-    for fdef in schema_ddl.split(","):
-        name, typ = fdef.strip().split(None, 1)
-        fields.append((name, typ))
+    fields = [(f.name, f.dataType) for f in _parse_datatype_string(schema_ddl).fields]
     out = None
     for row in rows:
+        if len(row) != len(fields):
+            raise ValueError(
+                f"row {row!r} has {len(row)} values; schema {schema_ddl!r} "
+                f"has {len(fields)} fields"
+            )
         cols = [
             F.when(F.lit(True), F.lit(v).cast(t)).alias(n)
             for (n, t), v in zip(fields, row)

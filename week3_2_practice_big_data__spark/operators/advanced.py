@@ -24,6 +24,10 @@ one declarative plan with exact cross-engine results:
 
 from __future__ import annotations
 
+import itertools
+import os
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
@@ -34,6 +38,24 @@ from ..registry import register
 
 def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
     load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+_VIEW_SEQ = itertools.count()  # next() is atomic: unique across threads
+
+
+@contextmanager
+def _scoped_view(df: DataFrame, stem: str):
+    """Register ``df`` under a per-invocation temp-view name (pid + counter,
+    so concurrent builders in one session never overwrite each other's
+    view) for the duration of the block, then drop it even if the block
+    raises. ``spark.sql`` resolves the view into its plan, so a DataFrame
+    built inside the block does not need the catalog entry afterwards."""
+    name = f"{stem}_{os.getpid()}_{next(_VIEW_SEQ)}"
+    df.createOrReplaceTempView(name)
+    try:
+        yield name
+    finally:
+        df.sparkSession.catalog.dropTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -586,6 +608,17 @@ LIMIT 20
 _TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 
+def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The oriented token co-occurrence edge list, checkpointed once per
+    (session, sf_dir) and shared by the triangle-family keys."""
+    _view(spark, sf_dir, "documents")
+    return checkpointed(
+        _TRI_EDGE_CACHE,
+        (session_key(spark), sf_dir.rstrip("/")),
+        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
+    )
+
+
 @register(
     "graph_triangle_count",
     oracle=_triangle_sql("duckdb"),
@@ -596,15 +629,8 @@ _TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
     tags=("graph", "iterative"),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
-    ).createOrReplaceTempView("tri_edges")
-    return spark.sql(
-        _triangle_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
-    )
+    with _scoped_view(_tri_edges(spark, sf_dir), "tri_edges") as edges:
+        return spark.sql(_triangle_sql("spark", edges_ref=f"SELECT a, b FROM {edges}"))
 
 
 # ---------------------------------------------------------------------------
@@ -697,6 +723,17 @@ LIMIT 100
 _BIP_EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 
+def _bip_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part–supplier edge list, checkpointed once per (session,
+    sf_dir) and shared by the bipartite-graph keys."""
+    _view(spark, sf_dir, "lineitem")
+    return checkpointed(
+        _BIP_EDGE_CACHE,
+        (session_key(spark), sf_dir.rstrip("/")),
+        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
+    )
+
+
 @register(
     "graph_bipartite_jaccard",
     oracle=_bipartite_jaccard_sql("duckdb"),
@@ -709,22 +746,17 @@ _BIP_EDGE_CACHE: dict[tuple, DataFrame] = {}
     tags=("graph", "join", "agg"),
 )
 def graph_bipartite_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
-    ).createOrReplaceTempView("bip_edges")
-    capped = _capped_edges_view(spark)
-    out = spark.sql(
-        _bipartite_jaccard_sql(
-            "spark",
-            edges_ref="SELECT p, s FROM bip_edges",
-            ecap_ref=f"SELECT p, s FROM {capped}",
+    with (
+        _scoped_view(_bip_edges(spark, sf_dir), "bip_edges") as edges,
+        _scoped_view(_capped_edges(spark, edges), "bip_edges_capped") as capped,
+    ):
+        return spark.sql(
+            _bipartite_jaccard_sql(
+                "spark",
+                edges_ref=f"SELECT p, s FROM {edges}",
+                ecap_ref=f"SELECT p, s FROM {capped}",
+            )
         )
-    )
-    spark.catalog.dropTempView(capped)  # plan already resolved/inlined
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -819,58 +851,35 @@ LIMIT 100
     tags=("graph", "join", "agg"),
 )
 def graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
-    ).createOrReplaceTempView("bip_edges")
-    capped = _capped_edges_view(spark)
-    out = spark.sql(
-        _resource_alloc_sql(
-            "spark",
-            edges_ref="SELECT p, s FROM bip_edges",
-            ecap_ref=f"SELECT p, s FROM {capped}",
+    with (
+        _scoped_view(_bip_edges(spark, sf_dir), "bip_edges") as edges,
+        _scoped_view(_capped_edges(spark, edges), "bip_edges_capped") as capped,
+    ):
+        return spark.sql(
+            _resource_alloc_sql(
+                "spark",
+                edges_ref=f"SELECT p, s FROM {edges}",
+                ecap_ref=f"SELECT p, s FROM {capped}",
+            )
         )
-    )
-    spark.catalog.dropTempView(capped)  # plan already resolved/inlined
-    return out
 
 
-_CAPPED_VIEW_SEQ = 0
-
-
-def _capped_edges_view(spark: SparkSession) -> str:
-    """Register the per-invocation capped edge list (parts with degree
-    <= _BIP_PART_CAP) under a UNIQUE view name, materialized behind a
-    LAZY localCheckpoint, and return the name. The checkpoint is the
-    point: it is a physical barrier Catalyst's inner-join flattening
-    cannot reorder across, so the hot-part cap provably prunes candidate
-    GENERATION (before the per-part self-join explodes C(d,2) pairs)
-    instead of filtering after it. Rebuilt per builder call — per-run
-    work, nothing cached across invocations.
-
-    ADVICE r13: a fixed view name let concurrent builders in one session
-    overwrite each other's view mid-query; the per-invocation name (pid +
-    counter) removes that, and the CALLER drops the view right after
-    spark.sql() resolves it (resolution inlines the plan, so the catalog
-    entry is not needed at action time — no catalog accumulation). The
-    checkpointed blocks themselves are freed by the ContextCleaner once
-    the returned plan is unreachable; they are per-run MBs, never
-    cross-run state."""
-    global _CAPPED_VIEW_SEQ
-    _CAPPED_VIEW_SEQ += 1
-    import os as _os
-
-    name = f"bip_edges_capped_{_os.getpid()}_{_CAPPED_VIEW_SEQ}"
-    spark.sql(
+def _capped_edges(spark: SparkSession, edges: str) -> DataFrame:
+    """The edge list restricted to parts with degree <= _BIP_PART_CAP,
+    behind a LAZY localCheckpoint. The checkpoint is the point: it is a
+    physical barrier Catalyst's inner-join flattening cannot reorder
+    across, so the hot-part cap provably prunes candidate GENERATION
+    (before the per-part self-join explodes C(d,2) pairs) instead of
+    filtering after it. Rebuilt per builder call — per-run work, nothing
+    cached across invocations; the ContextCleaner frees its blocks once
+    the returned plan is unreachable."""
+    return spark.sql(
         f"""
-SELECT e.p, e.s FROM bip_edges e
-JOIN (SELECT p FROM bip_edges GROUP BY p
+SELECT e.p, e.s FROM {edges} e
+JOIN (SELECT p FROM {edges} GROUP BY p
       HAVING count(*) <= {_BIP_PART_CAP}) c
   ON c.p = e.p"""
-    ).localCheckpoint(eager=False).createOrReplaceTempView(name)
-    return name
+    ).localCheckpoint(eager=False)
 
 # ---------------------------------------------------------------------------
 # graph_clustering_coeff — local clustering coefficient on the token
@@ -952,15 +961,8 @@ LIMIT 20
     tags=("graph", "iterative", "agg"),
 )
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
-    ).createOrReplaceTempView("tri_edges")
-    return spark.sql(
-        _clustering_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
-    )
+    with _scoped_view(_tri_edges(spark, sf_dir), "tri_edges") as edges:
+        return spark.sql(_clustering_sql("spark", edges_ref=f"SELECT a, b FROM {edges}"))
 
 
 # ---------------------------------------------------------------------------
@@ -1051,15 +1053,8 @@ FROM agg
     tags=("graph", "agg", "stats"),
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
-    ).createOrReplaceTempView("tri_edges")
-    return spark.sql(
-        _degree_dist_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
-    )
+    with _scoped_view(_tri_edges(spark, sf_dir), "tri_edges") as edges:
+        return spark.sql(_degree_dist_sql("spark", edges_ref=f"SELECT a, b FROM {edges}"))
 
 
 # ---------------------------------------------------------------------------
@@ -1308,16 +1303,11 @@ def _bfs_expand(und: DataFrame, frontier: DataFrame, visited: DataFrame):
 def iter_bfs_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
-    for t in ("lineitem", "supplier"):
-        _view(spark, sf_dir, t)
-    checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
-    ).createOrReplaceTempView("bip_edges")
-    und = spark.sql(
-        f"WITH bip AS (SELECT p, s FROM bip_edges) {_BFS_UND_SQL}"
-    ).localCheckpoint(eager=True)
+    _view(spark, sf_dir, "supplier")
+    with _scoped_view(_bip_edges(spark, sf_dir), "bip_edges") as edges:
+        und = spark.sql(
+            f"WITH bip AS (SELECT p, s FROM {edges}) {_BFS_UND_SQL}"
+        ).localCheckpoint(eager=True)
     nodes = und.select(F.col("src").alias("node")).distinct()
     frontier = spark.sql(_BFS_SEEDS_SQL).localCheckpoint(eager=True)
     visited = frontier

@@ -64,6 +64,25 @@ CHANGED: dict[str, str] = {
     "stream_session_window_native": "r14",
     "stream_stream_outer_join": "r14",
     "src_python_datasource_stream": "r14",
+    # every streaming query now runs through streams._run_stream
+    "stream_dedup_state": "r14",
+    "stream_tumbling_file_rate": "r14",
+    "stream_foreachbatch": "r14",
+    "stream_stream_join": "r14",
+    "stream_static_join": "r14",
+    "stream_sink_parquet": "r14",
+    "stream_rate_source": "r14",
+    "stream_unbounded_socket": "r14",
+    "stream_event_pattern_cep": "r14",
+    "stream_dedup_within_watermark": "r14",
+    "stream_checkpoint_restart": "r14",
+    "src_statestore_read": "r14",
+    "src_statestore_changefeed": "r14",
+    "stream_trigger_availablenow": "r14",
+    # derived relations registered through advanced._scoped_view
+    "iter_gd_logreg": "r14",
+    "win_islands_blocked": "r14",
+    "iter_als_rank2": "r14",
 }
 
 _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")

@@ -1061,10 +1061,10 @@ def test_rocksdb_provider_actually_backs_the_state(spark):
     session conf must be restored to the pre-key provider afterwards."""
     import pyspark.sql.functions as F
 
+    from week3_2_practice_big_data__spark.common import _scoped_conf
     from week3_2_practice_big_data__spark.streaming.streams import (
         _ROCKSDB_PROVIDER,
         _chunked_source,
-        _scoped_conf,
     )
     from week3_2_practice_big_data__spark.io import load_table
 
@@ -1172,9 +1172,7 @@ def test_time_type_flag_scoped(spark):
     only, probed r11), and TIME semantics inside the scope must agree
     with the literal forms."""
     from week3_2_practice_big_data__spark import REGISTRY
-    from week3_2_practice_big_data__spark.streaming.streams import (
-        _scoped_conf,
-    )
+    from week3_2_practice_big_data__spark.common import _scoped_conf
 
     before = spark.conf.get("spark.sql.timeType.enabled", None)
     df = REGISTRY["fn_time_type"].builder(spark, SF_SMALL)
@@ -1534,11 +1532,12 @@ def test_local_rows_df_parses_parameterized_ddl_and_checks_arity(spark):
 
 
 def test_graph_keys_leave_no_temp_views(spark):
-    """The graph builders' edge-list views (tri_edges, bip_edges and the
-    capped view) are scoped to the builder call: after every graph key
-    runs, the session's temp views are what they were. The base tables
-    are registered under their own names first, as any query over them
-    would."""
+    """The builders' derived views (the graph keys' tri_edges, bip_edges
+    and capped view; gd_data, isl_edges, als_r and als_p) are scoped to
+    the builder call: after every graph key and the three checkpointed
+    iterative/window keys run, the session's temp views are what they
+    were. The base tables are registered under their own names first, as
+    any query over them would."""
     from week3_2_practice_big_data__spark.io import register_views
 
     def temp_views():
@@ -1546,9 +1545,11 @@ def test_graph_keys_leave_no_temp_views(spark):
 
     register_views(spark, SF_SMALL)
     before = temp_views()
+    scoped = ("iter_gd_logreg", "win_islands_blocked", "iter_als_rank2")
     for q in REGISTRY.values():
-        if "graph" in q.tags:
+        if "graph" in q.tags or q.key in scoped:
             q.builder(spark, SF_SMALL).collect()
     after = temp_views()
     assert after == before
-    assert not [v for v in after if v.startswith(("tri_edges", "bip_edges"))]
+    stems = ("tri_edges", "bip_edges", "gd_data", "isl_edges", "als_r", "als_p")
+    assert not [v for v in after if v.startswith(stems)]

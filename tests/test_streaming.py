@@ -482,8 +482,9 @@ def test_pipeline_e2e_restart_straddles_dedup_and_session_state(spark):
 
     from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.streaming.streams import (
+        _parquet_sink,
         _pipeline_e2e_transform,
-        _stream_shuffle,
+        _run_stream,
     )
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -516,28 +517,17 @@ def test_pipeline_e2e_restart_straddles_dedup_and_session_state(spark):
     qname = "w32bd_spe2e_fix"
 
     def life():
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                _pipeline_e2e_transform(
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(stage)
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .queryName(qname)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-                progress = list(query.recentProgress)
-            finally:
-                query.stop()
+        query = _run_stream(
+            spark,
+            qname,
+            _pipeline_e2e_transform(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(stage)
+            ),
+            _parquet_sink(sink, ckpt),
+        )
+        progress = query.recentProgress
         return sum(
             int(
                 (p.get("observedMetrics") or {})
@@ -591,28 +581,23 @@ def test_python_datasource_stream_offset_progression(spark):
         _PYDSS_CHUNK,
         _PYDSS_N,
     )
+    from week3_2_practice_big_data__spark.streaming.streams import (
+        _memory_sink,
+        _run_stream,
+    )
 
     # running the key registers the w32bd_lcg_stream format
     REGISTRY["src_python_datasource_stream"].builder(spark, SF_SMALL)
 
     qname = "w32bd_pydss_prog"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    query = (
+    counted = (
         spark.readStream.format("w32bd_lcg_stream")
         .load()
         .agg(F.count(F.lit(1)).alias("n"))
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .start()
     )
-    try:
-        query.processAllAvailable()
-        progress = list(query.recentProgress)
-    finally:
-        query.stop()
+    progress = _run_stream(
+        spark, qname, counted, _memory_sink("complete")
+    ).recentProgress
     data_batches = [p for p in progress if int(p["numInputRows"]) > 0]
     assert len(data_batches) >= 2, len(data_batches)
     total = sum(int(p["numInputRows"]) for p in progress)
@@ -674,9 +659,7 @@ def test_scoped_conf_rolls_back_on_partial_failure(spark):
     were unset before entry."""
     import pytest
 
-    from week3_2_practice_big_data__spark.streaming.streams import (
-        _scoped_conf,
-    )
+    from week3_2_practice_big_data__spark.common import _scoped_conf
 
     probe = "spark.w32bd.test.scopedconf.probe"
     static = "spark.sql.warehouse.dir"  # static: set() raises when active
@@ -709,3 +692,71 @@ def test_pid_run_dir_reaps_dead_siblings(tmp_path, monkeypatch):
     assert not (tmp_path / f"x_run_sf9_{dead_pid}").exists()  # reaped
     assert (tmp_path / "x_run_sf9_notapid").exists()  # suffix not a pid
     assert (tmp_path / f"other_run_sf9_{dead_pid}").exists()  # other prefix
+
+
+def test_run_stream_stops_query_and_restores_width_when_wait_raises(spark):
+    """_run_stream stops its query in `finally`: when the wait step
+    raises, no query of that name is left active and the session's
+    shuffle width (set to the stream width while the query ran) is back."""
+    import pytest
+
+    from week3_2_practice_big_data__spark.streaming.streams import (
+        _memory_sink,
+        _run_stream,
+        _stream_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    seen = []
+
+    def wait(query, drain):
+        seen.append(spark.conf.get(key))
+        raise RuntimeError("wait failed")
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+    with pytest.raises(RuntimeError, match="wait failed"):
+        _run_stream(spark, "w32bd_runfail", rate, _memory_sink(), wait=wait)
+    assert seen == [str(_stream_partitions(spark))]
+    assert not [q for q in spark.streams.active if q.name == "w32bd_runfail"]
+    assert spark.conf.get(key) == before
+
+
+def test_only_run_stream_runs_streaming_queries():
+    """Every streaming query in the engine goes through
+    streams._run_stream: `.writeStream`, `processAllAvailable`,
+    `awaitTermination` and `spark.streams.active` appear nowhere else in
+    the package source, so no hand-built lifecycle (and no query stopped
+    outside a `finally`) creeps back."""
+    import ast
+    import pathlib
+
+    import week3_2_practice_big_data__spark as pkg
+
+    names = {"writeStream", "processAllAvailable", "awaitTermination"}
+
+    def is_lifecycle(node):
+        if isinstance(node, ast.Attribute):
+            if node.attr in names:
+                return True
+            return (
+                node.attr == "active"
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "streams"
+            )
+        return isinstance(node, ast.Constant) and node.value in names
+
+    inside, outside = [], []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        helper = set()
+        if path.name == "streams.py":
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_run_stream":
+                    helper = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if is_lifecycle(node):
+                where = inside if id(node) in helper else outside
+                where.append(f"{path.name}:{node.lineno}")
+    assert outside == []
+    assert len(inside) >= 3, inside  # the helper itself is still found

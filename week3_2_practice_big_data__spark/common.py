@@ -106,6 +106,53 @@ def build_once(out: str, build, stamp: str = "") -> str:
     return out
 
 
+class _scoped_conf:
+    """Set session confs for a block, restore after (unset keys are
+    restored by unsetting — conf.get default sentinel)."""
+
+    def __init__(self, spark, confs: dict):
+        self._spark = spark
+        self._confs = confs
+
+    def __enter__(self):
+        # Snapshot ALL old values before setting ANY (ADVICE r10): if a
+        # later set() raises (invalid/static conf), the except rolls back
+        # the keys already applied so the session is never left half-set.
+        #
+        # conf.get(k) would return the DEFAULT value for an unset key
+        # and the restore would then SET it explicitly — a visible
+        # hygiene change (and a wrong restore if the default ever
+        # differs per-cluster). get(k, None) distinguishes unset.
+        self._old = {k: self._spark.conf.get(k, None) for k in self._confs}
+        applied = []
+        try:
+            for k, v in self._confs.items():
+                self._spark.conf.set(k, v)
+                applied.append(k)
+        except Exception:
+            for k in applied:
+                old = self._old[k]
+                if old is None:
+                    self._spark.conf.unset(k)
+                else:
+                    self._spark.conf.set(k, old)
+            raise
+        return self
+
+    def __exit__(self, *exc):
+        for k, old in self._old.items():
+            if old is None:
+                self._spark.conf.unset(k)
+            else:
+                self._spark.conf.set(k, old)
+        return False
+
+
+def _us(dialect: str) -> str:
+    """Event time in epoch microseconds — the one dialect seam for it."""
+    return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
+
+
 def ordered_string_agg(dialect: str, expr: str, sep: str, order_by: str) -> str:
     """Deterministic ordered string aggregation — the one dialect seam for
     listagg: Spark spells it `listagg(x, sep) WITHIN GROUP (ORDER BY o)`,

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..common import checkpointed, ordered_string_agg, session_key
-from ..io import load_table
+from ..io import register_views
 from ..registry import register
 from .text import (
     _CLUSTER_ITER,
@@ -36,10 +36,6 @@ from .text import (
     tokens_sql,
 )
 from .similarity import _dot_fold
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -100,7 +96,7 @@ ORDER BY doc_id
     tags=("ns", "text", "quality"),
 )
 def ns_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_repetition_sql("spark"))
 
 
@@ -213,7 +209,7 @@ ORDER BY per_src.source
 def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     checkpointed(
         _DOMAIN_SRC_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -285,7 +281,7 @@ _DOMAIN_SRC_CACHE: dict[tuple, DataFrame] = {}
 def ns_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     checkpointed(
         _DOMAIN_SRC_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -390,7 +386,7 @@ LIMIT {_KN_TOP}
 def ns_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     checkpointed(
         _KN_BC_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -455,7 +451,7 @@ LIMIT 50
     tags=("ns", "text", "decontamination"),
 )
 def ns_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_decontaminate_ngram_sql("spark"))
 
 
@@ -574,7 +570,7 @@ ORDER BY new_id
 def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _cached_minhash_sig
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     _cached_minhash_sig(spark, sf_dir).createOrReplaceTempView("minhash_sig")
     return spark.sql(
         _dedup_incremental_sql(
@@ -620,7 +616,7 @@ def ns_dedup_incremental_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.files import _scratch
     from .text import MINHASH_BAND, MINHASH_K, _bandsig, _cached_minhash_sig
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     band = MINHASH_BAND
     out = _scratch(sf_dir, "bandidx")
 
@@ -734,7 +730,7 @@ ORDER BY doc_id
     tags=("ns", "dedup", "text"),
 )
 def ns_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_dedup_paragraph_sql("spark"))
 
 
@@ -813,7 +809,7 @@ ORDER BY s.vec_id
     tags=("ns", "similarity", "scale"),
 )
 def ns_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "embeddings")
+    register_views(spark, sf_dir, ("embeddings",))
     return spark.sql(_quantize_sql("spark"))
 
 
@@ -829,7 +825,7 @@ def ns_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ns_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _cached_emb_norm
 
-    _view(spark, sf_dir, "embeddings")
+    register_views(spark, sf_dir, ("embeddings",))
     _cached_emb_norm(spark, sf_dir).createOrReplaceTempView("embeddings_norm")
     return spark.sql(
         _knn_join_sql(
@@ -888,7 +884,7 @@ LIMIT {_BPE_TOP}
     tags=("ns", "text", "tokenizer"),
 )
 def ns_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_bpe_pair_sql("spark"))
 
 
@@ -1000,7 +996,7 @@ def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream. Shared by ns_text_perplexity and ns_pipeline_e2e (r8)."""
     from .text import cached_tokens_ref
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return checkpointed(
         _PPL_DOC_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -1127,7 +1123,7 @@ _IMP_Q_CACHE: dict[tuple, DataFrame] = {}
 def ns_sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _quality_sql
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     # Materialize the quality scores once: the blocked-ntile tail reads q
     # from both the bucket-count and the rank CTE, and inlining would
     # re-run the regex scoring scan per reference.
@@ -1279,7 +1275,7 @@ _SUBSTR_SD_CACHE: dict[tuple, DataFrame] = {}
 def ns_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     key = (session_key(spark), sf_dir.rstrip("/"))
     checkpointed(
         _SUBSTR_SD_CACHE, key,
@@ -1334,7 +1330,7 @@ ORDER BY source, rk
     tags=("ns", "sampling"),
 )
 def ns_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_reservoir_sql("spark"))
 
 
@@ -1463,7 +1459,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     the latter; one training, two keys, same merge table."""
     import pyspark.sql.functions as F
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     seq = spark.sql(f"""
 SELECT v.token, v.freq, s.i AS pos, substring(v.token, CAST(s.i AS INT) + 1, 1) AS sym
 FROM (SELECT token, count(*) AS freq FROM ({tokens_sql("spark")}) t GROUP BY token) v
@@ -1779,7 +1775,7 @@ ORDER BY canon_url
     tags=("ns", "text", "dedup"),
 )
 def ns_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_dedup_url_sql("spark"))
 
 
@@ -1845,7 +1841,7 @@ ORDER BY doc_id, chunk_start
     tags=("ns", "text", "chunking"),
 )
 def ns_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_chunk_overlap_sql("spark"))
 
 
@@ -1871,7 +1867,7 @@ def _cached_bloom_ng(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, gram) distinct corpus 5-grams materialized once per
     (session, sf) — shared by ns_decontaminate_bloom and the pipeline's
     decontamination stage (ns_pipeline_e2e, r8)."""
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return checkpointed(
         _BLOOM_NG_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -2043,7 +2039,7 @@ ORDER BY source
     tags=("ns", "text", "quality"),
 )
 def ns_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_quality_classifier_sql("spark"))
 
 
@@ -2124,7 +2120,7 @@ ORDER BY pos
     tags=("ns", "scale", "ordering"),
 )
 def ns_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_global_shuffle_spark_sql())
 
 
@@ -2190,7 +2186,7 @@ def ns_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection; under Spark CTE inlining that re-runs the corpus token
     # aggregation twice. Materialize the bounded (one row per source)
     # relation once — corpus scanned exactly once.
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     full = _mixture_epochs_sql("spark")
     w_sql = full.split("tot AS", 1)[0].rstrip().rstrip(",") + (
         "\nSELECT * FROM w"
@@ -2596,7 +2592,7 @@ _PIPE_DOC2_CACHE: dict[tuple, DataFrame] = {}
 def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _cached_minhash_pairs, cached_rep_map_ref
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     key = (session_key(spark), sf_dir.rstrip("/"))
     rep_ref = cached_rep_map_ref(spark, sf_dir)
     _cached_minhash_pairs(spark, sf_dir).createOrReplaceTempView(
@@ -2725,7 +2721,7 @@ def ns_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scored-and-bucketed relation feeds both the bucket summary and
     # the rank join; CTE inlining would re-run the map-side scoring pass
     # per reference (r8 plan audit: 2 documents scans) — materialize once.
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     checkpointed(
         _CURR_PB_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),

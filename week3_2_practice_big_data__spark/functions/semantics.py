@@ -23,12 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..common import ordered_string_agg
-from ..io import load_table
+from ..io import register_views
 from ..registry import register
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ ORDER BY c_custkey
     tags=("scalar", "semantics"),
 )
 def fn_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, ("customer",))
     return spark.sql(_null_semantics_sql("spark"))
 
 
@@ -114,7 +110,7 @@ ORDER BY n_nationkey, k
     tags=("scalar", "semantics"),
 )
 def fn_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "nation")
+    register_views(spark, sf_dir, ("nation",))
     return spark.sql(_map_ops_sql("spark"))
 
 
@@ -152,7 +148,7 @@ ORDER BY dist, name_a, name_b
     tags=("scalar", "semantics", "dedup"),
 )
 def fn_string_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "part")
+    register_views(spark, sf_dir, ("part",))
     return spark.sql(_string_similarity_sql("spark"))
 
 
@@ -188,7 +184,7 @@ ORDER BY event_type
     tags=("scalar", "semantics", "json"),
 )
 def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_variant_json_sql("spark"))
 
 
@@ -241,7 +237,7 @@ ORDER BY doc_id
     tags=("scalar", "semantics"),
 )
 def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_url_parse_sql("spark"))
 
 
@@ -273,8 +269,7 @@ ORDER BY r_name
     tags=("agg", "semantics"),
 )
 def agg_string_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "nation")
-    _view(spark, sf_dir, "region")
+    register_views(spark, sf_dir, ("nation", "region"))
     return spark.sql(_listagg_sql("spark"))
 
 
@@ -323,7 +318,7 @@ FROM orders
     tags=("scalar", "semantics", "ansi"),
 )
 def fn_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(_try_arith_sql("spark"))
 
 
@@ -394,7 +389,7 @@ ORDER BY c_custkey
     tags=("scalar", "semantics", "xml"),
 )
 def fn_xml_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, ("customer",))
     return spark.sql(_xml_funcs_sql("spark"))
 
 
@@ -465,7 +460,7 @@ ORDER BY segment
     tags=("scalar", "semantics", "collation"),
 )
 def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, ("customer",))
     return spark.sql(_collation_sql("spark"))
 
 
@@ -524,9 +519,9 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_invariants.py::test_time_type_flag_scoped), so scope it
     # around the spark.sql() parse and restore immediately: later keys on
     # the shared session never see the preview flag (ADVICE r10).
-    from ..streaming.streams import _scoped_conf
+    from ..common import _scoped_conf
 
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     with _scoped_conf(spark, {"spark.sql.timeType.enabled": "true"}):
         return spark.sql(_time_type_sql("spark"))
 
@@ -595,7 +590,7 @@ FROM gaps GROUP BY user_id ORDER BY user_id
     tags=("scalar", "semantics", "datetime"),
 )
 def fn_interval_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_interval_agg_sql("spark"))
 
 
@@ -645,7 +640,7 @@ FROM customer ORDER BY c_custkey
     tags=("scalar", "semantics"),
 )
 def fn_mask_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, ("customer",))
     return spark.sql(_mask_sql("spark"))
 
 
@@ -694,5 +689,5 @@ FROM customer ORDER BY c_custkey
     tags=("scalar", "semantics"),
 )
 def fn_crypto_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, ("customer",))
     return spark.sql(_crypto_sql("spark"))

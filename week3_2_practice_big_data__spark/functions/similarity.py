@@ -21,16 +21,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..io import load_table, register_views
 from ..registry import register
 from ..common import checkpointed, session_key
 from .. import synth
 
 _DIM = 64
-
-
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
 
 
 def _long_sql(dialect: str) -> str:
@@ -96,7 +92,7 @@ LIMIT {_TOPK}
     tags=("ns", "similarity", "bench"),
 )
 def ns_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("embeddings",))
     return spark.sql(_topk_sql("spark"))
 
 
@@ -219,7 +215,7 @@ def _cached_band_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlines CTEs, so the naive form re-runs the 32-plane projection per
     reference — the checkpoint makes each reference a materialized scan."""
     def build():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(_band_sig_sql("spark")).coalesce(4)
 
     return checkpointed(_BAND_SIG_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
@@ -248,7 +244,7 @@ _EMB_NORM_CACHE: dict[tuple, DataFrame] = {}
 
 def _cached_emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(_emb_norm_sql("spark")).coalesce(4)
 
     return checkpointed(_EMB_NORM_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
@@ -372,7 +368,7 @@ def _rep_views(spark: SparkSession, sf_dir: str) -> None:
     key = (session_key(spark), sf_dir.rstrip("/"))
 
     def reps():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(_rep_sql("spark")).coalesce(4)
 
     checkpointed(_REP_CACHE, key, reps).createOrReplaceTempView("embeddings_reps")
@@ -386,7 +382,7 @@ def _rep_views(spark: SparkSession, sf_dir: str) -> None:
         ).coalesce(4)
 
     def gm():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(
             _gm_sql("spark", "SELECT vec_id, embedding FROM embeddings_reps")
         ).coalesce(4)
@@ -585,7 +581,7 @@ LIMIT {_TOPK}
     tags=("ns", "similarity", "scale"),
 )
 def ns_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("embeddings",))
     return spark.sql(_ivf_sql("spark"))
 
 
@@ -623,7 +619,7 @@ def ns_sim_ann_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import build_once
     from ..sources.files import _scratch
 
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("embeddings",))
     out = _scratch(sf_dir, "ivfidx")
 
     def build(tmp: str) -> None:
@@ -741,7 +737,7 @@ ORDER BY cl.vec_id
     tags=("ns", "dedup", "similarity", "scale"),
 )
 def ns_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("embeddings",))
     _rep_views(spark, sf_dir)
     key = (session_key(spark), sf_dir.rstrip("/"))
 
@@ -906,7 +902,7 @@ ORDER BY v.dim
     tags=("statml", "ns", "similarity", "iterative"),
 )
 def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("embeddings",))
     cov = spark.sql(_pca_cov_sql("spark")).localCheckpoint(eager=True)
     cov.createOrReplaceTempView("pca_cov")
     v = spark.sql(_pca_v0_sql("spark")).localCheckpoint(eager=True)
@@ -1129,7 +1125,7 @@ def _kme_lloyd(spark: SparkSession, sf_dir: str):
     literal per-round stat rows). Shared by iter_kmeans_embed (which
     appends the live round-R plan) and ns_topic_mixture (which consumes
     only the final centroids)."""
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("embeddings",))
     cents = [list(c) for c in _centroid_components()]
     lit_rows = []
     for rnd in range(1, _KME_ROUNDS):

@@ -22,16 +22,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..io import register_views
 from ..registry import register
 from ..common import checkpointed, session_key
 from .. import synth
 
 _P = 2_147_483_647  # hash modulus (2^31-1)
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str = "documents") -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # Restrict signature computation to exact-dup representatives (min doc_id
@@ -54,7 +50,7 @@ def cached_tokens_ref(spark: SparkSession, sf_dir: str) -> str:
     otherwise re-runs the explode per reference (tfidf ×3, pmi ×3,
     langid ×2, naive Bayes ×4 measured). DuckDB materializes CTEs, so
     the shared oracle text was always single-pass."""
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     checkpointed(
         _TOK_MAT_CACHE, (session_key(spark), sf_dir.rstrip("/")),
         lambda: spark.sql(tokens_sql("spark")).coalesce(8),
@@ -67,7 +63,7 @@ def cached_rep_map_ref(spark: SparkSession, sf_dir: str) -> str:
     (session, sf) and SHARED by the minhash/simhash/substring member
     expansions (each referenced it 2–4 times → that many documents
     scans + text-partition windows)."""
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     checkpointed(
         _REP_MAP_CACHE, (session_key(spark), sf_dir.rstrip("/")),
         lambda: spark.sql(_REP_MAP_SQL).coalesce(8),
@@ -164,7 +160,7 @@ ORDER BY doc_id
     tags=("ns", "dedup", "bench"),
 )
 def ns_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_dedup_exact_sql("spark"))
 
 
@@ -208,7 +204,7 @@ def _cached_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard stage references it three times (inverted-index self-join +
     sizes)."""
     def build():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("documents",))
         return spark.sql(_capped_shingles_sql("spark")).coalesce(4)
 
     return checkpointed(_SHINGLE_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
@@ -347,7 +343,7 @@ def _cached_minhash_sig(
     makes each reference a scan of the materialized relation (cache-manager
     matching is unreliable for plans with collect_list/lambda exprs)."""
     def build():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("documents",))
         return spark.sql(_minhash_sig_sql("spark", where)).coalesce(4)
 
     return checkpointed(
@@ -561,7 +557,7 @@ def _cached_simhash_fp(
     reference into an InMemoryTableScan (same discipline as the pagerank
     edge cache)."""
     def build():
-        _view(spark, sf_dir)
+        register_views(spark, sf_dir, ("documents",))
         return spark.sql(_simhash_fp_sql("spark", where)).coalesce(4)
 
     return checkpointed(
@@ -627,7 +623,7 @@ FROM documents ORDER BY doc_id
     tags=("ns", "text"),
 )
 def ns_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_clean_sql("spark"))
 
 
@@ -748,7 +744,7 @@ FROM documents GROUP BY lang ORDER BY lang
     tags=("ns", "text"),
 )
 def ns_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_stats_sql("spark"))
 
 
@@ -890,7 +886,7 @@ FROM documents ORDER BY doc_id
     tags=("ns", "text"),
 )
 def ns_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_quality_sql("spark"))
 
 
@@ -920,7 +916,7 @@ FROM documents ORDER BY doc_id
     tags=("ns", "text"),
 )
 def ns_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_tokens_count_sql("spark"))
 
 
@@ -959,7 +955,7 @@ FROM hashed GROUP BY doc_id ORDER BY doc_id
     tags=("ns", "text"),
 )
 def ns_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_fingerprint_sql("spark"))
 
 
@@ -996,7 +992,7 @@ ORDER BY doc_id
     tags=("ns", "text", "scale"),
 )
 def ns_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_SAMPLE_SQL)
 
 
@@ -1056,7 +1052,7 @@ FROM packed GROUP BY pack_id ORDER BY pack_id
     tags=("ns", "text", "scale"),
 )
 def ns_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_pack_sql("spark"))
 
 
@@ -1091,7 +1087,7 @@ ORDER BY split
     tags=("ns", "text"),
 )
 def ns_split_train_val(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_split_sql("spark"))
 
 
@@ -1139,7 +1135,7 @@ ORDER BY p.probe
     tags=("ns", "text"),
 )
 def ns_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_decontaminate_sql("spark"))
 
 
@@ -1307,7 +1303,7 @@ ORDER BY doc_id, pos
 def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("documents",))
 
     @udtf(returnType="pos int, token string, start_off int, end_off int",
           useArrow=True)

@@ -32,12 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..common import checkpointed, session_key
-from ..io import load_table
+from ..io import register_views
 from ..registry import register
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 _VIEW_SEQ = itertools.count()  # next() is atomic: unique across threads
@@ -139,15 +135,16 @@ def iter_gd_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the checkpointed-relation discipline of the dedup family); every
     # step then reads the in-memory RDD. At 100 TB this is exactly the
     # cached-training-set shape distributed SGD assumes.
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
+    register_views(spark, sf_dir, ("lineitem",))
+    data = checkpointed(
         _GD_DATA_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
         lambda: spark.sql(_GD_DATA_SQL),
-    ).createOrReplaceTempView("gd_data")
-    return spark.sql(
-        _gd_logreg_sql("spark", data_ref="SELECT y, x1, x2 FROM gd_data")
     )
+    with _scoped_view(data, "gd_data") as view:
+        return spark.sql(
+            _gd_logreg_sql("spark", data_ref=f"SELECT y, x1, x2 FROM {view}")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -261,7 +258,7 @@ FROM bm_count CROSS JOIN exact_count
     tags=("agg", "scale"),
 )
 def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_bitmap_sql("spark"))
 
 
@@ -300,7 +297,7 @@ ORDER BY range_start
     tags=("window", "quality"),
 )
 def win_islands_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_islands_sql("spark"))
 
 
@@ -404,17 +401,18 @@ _ISL_EDGE_CACHE: dict[tuple, DataFrame] = {}
     tags=("window", "quality", "scale"),
 )
 def win_islands_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
 
     def build():
         return spark.sql(_islands_edges_sql()).coalesce(8)
 
-    checkpointed(
+    edges = checkpointed(
         _ISL_EDGE_CACHE, (session_key(spark), sf_dir.rstrip("/")), build
-    ).createOrReplaceTempView("isl_edges")
-    return spark.sql(
-        _islands_blocked_sql("SELECT b, s, e, lflush, rflush FROM isl_edges")
     )
+    with _scoped_view(edges, "isl_edges") as view:
+        return spark.sql(
+            _islands_blocked_sql(f"SELECT b, s, e, lflush, rflush FROM {view}")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -503,7 +501,7 @@ def iter_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.text import tokens_sql
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     edges = spark.sql(f"""
 SELECT DISTINCT
   CASE WHEN token < nxt THEN token ELSE nxt END AS a,
@@ -611,7 +609,7 @@ _TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
 def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oriented token co-occurrence edge list, checkpointed once per
     (session, sf_dir) and shared by the triangle-family keys."""
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return checkpointed(
         _TRI_EDGE_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -726,7 +724,7 @@ _BIP_EDGE_CACHE: dict[tuple, DataFrame] = {}
 def _bip_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The part–supplier edge list, checkpointed once per (session,
     sf_dir) and shared by the bipartite-graph keys."""
-    _view(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ("lineitem",))
     return checkpointed(
         _BIP_EDGE_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -1169,21 +1167,22 @@ JOIN qn q ON q.i = r.i
     tags=("iterative", "ml", "join"),
 )
 def iter_als_rank2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("lineitem", "orders"):
-        _view(spark, sf_dir, t)
+    register_views(spark, sf_dir, ("lineitem", "orders"))
     key = (session_key(spark), sf_dir.rstrip("/"))
-    checkpointed(
+    ratings = checkpointed(
         _ALS_R_CACHE, key, lambda: spark.sql(_ALS_RATINGS_SQL).coalesce(8)
-    ).createOrReplaceTempView("als_r")
-    r_ref = "SELECT u, i, rt FROM als_r"
-    checkpointed(
-        _ALS_P_CACHE,
-        key,
-        lambda: spark.sql(_als_user_step_sql(r_ref)).coalesce(4),
-    ).createOrReplaceTempView("als_p")
-    return spark.sql(
-        _als_final_sql(r_ref, p_ref="SELECT u, f1, f2 FROM als_p")
     )
+    with _scoped_view(ratings, "als_r") as r_view:
+        r_ref = f"SELECT u, i, rt FROM {r_view}"
+        users = checkpointed(
+            _ALS_P_CACHE,
+            key,
+            lambda: spark.sql(_als_user_step_sql(r_ref)).coalesce(4),
+        )
+        with _scoped_view(users, "als_p") as p_view:
+            return spark.sql(
+                _als_final_sql(r_ref, p_ref=f"SELECT u, f1, f2 FROM {p_view}")
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -1303,7 +1302,7 @@ def _bfs_expand(und: DataFrame, frontier: DataFrame, visited: DataFrame):
 def iter_bfs_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
-    _view(spark, sf_dir, "supplier")
+    register_views(spark, sf_dir, ("supplier",))
     with _scoped_view(_bip_edges(spark, sf_dir), "bip_edges") as edges:
         und = spark.sql(
             f"WITH bip AS (SELECT p, s FROM {edges}) {_BFS_UND_SQL}"

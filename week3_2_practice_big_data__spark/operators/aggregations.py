@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..io import load_table, register_views
 from ..registry import register
 from ..common import dec as _dec
 from .. import synth
@@ -869,9 +869,7 @@ def agg_sketch_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer (columnar scan + transform) beats materializing it — the
     # opposite tradeoff from the tokenize/window relations the text family
     # checkpoints. Measured: 5.74× → 1.4× on the 10× ladder.
-    from ..functions.llmprep import _view
-
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(_cms_heavy_sql("spark"))
 
 

@@ -17,18 +17,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..common import _us
+from ..io import register_views
 from ..registry import register
 
 _GAP_US = 5 * 60 * 1_000_000  # same 5-minute gap as stream_session_window
-
-
-def _us(dialect: str) -> str:
-    return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
-
-
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +80,7 @@ ORDER BY user_id, session_start_us
     tags=("window", "analytics"),
 )
 def win_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_sessionize_sql("spark"))
 
 
@@ -153,7 +146,7 @@ _FUNNEL_CACHE: dict[tuple, DataFrame] = {}
 def win_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     key = (session_key(spark), sf_dir.rstrip("/"))
     refs = {}
     prev = None
@@ -203,7 +196,7 @@ ORDER BY cohort_day, day_off
     tags=("agg", "analytics"),
 )
 def agg_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_cohort_sql("spark"))
 
 
@@ -267,7 +260,7 @@ LIMIT 20
     tags=("join", "analytics", "scale"),
 )
 def join_interval_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_interval_overlap_sql("spark"))
 
 
@@ -413,7 +406,7 @@ ORDER BY u.user_id
     tags=("window", "analytics", "cep"),
 )
 def win_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_event_pattern_sql("spark"))
 
 # ---------------------------------------------------------------------------
@@ -516,7 +509,7 @@ ORDER BY touch_day
     tags=("window", "agg", "events"),
 )
 def win_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_attribution_sql("spark"))
 
 # ---------------------------------------------------------------------------
@@ -576,7 +569,7 @@ ORDER BY t_from, t_to
     tags=("window", "agg", "events"),
 )
 def win_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_markov_sql("spark"))
 
 
@@ -677,5 +670,5 @@ ORDER BY lifetime_d
     tags=("window", "agg", "stats"),
 )
 def win_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_survival_sql("spark"))

@@ -25,18 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import checkpointed, session_key
-from ..io import load_table
+from ..common import _us, checkpointed, session_key
+from ..io import load_table, register_views
 from ..registry import register
-
-
-def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def _us(dialect: str) -> str:
-    return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +74,7 @@ FROM checks ORDER BY check_name
     tags=("quality", "agg"),
 )
 def dq_constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders", "customer", "lineitem", "documents"))
+    register_views(spark, sf_dir, ("orders", "customer", "lineitem", "documents"))
     return spark.sql(_dq_sql("spark"))
 
 
@@ -135,7 +126,7 @@ ORDER BY user_id, valid_from
     tags=("quality", "window", "merge"),
 )
 def merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_scd2_sql("spark"))
 
 
@@ -200,7 +191,7 @@ ORDER BY user_id, us, event_id
     tags=("quality", "window", "stats"),
 )
 def win_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_zscore_sql("spark"))
 
 
@@ -236,7 +227,7 @@ def _table_stats_sql(dialect: str) -> str:
     tags=("quality", "source", "stats"),
 )
 def src_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_table_stats_sql("spark"))
 
 
@@ -340,7 +331,7 @@ ORDER BY event_type
     tags=("quality", "agg", "stats"),
 )
 def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
+    register_views(spark, sf_dir, ("events",))
     checkpointed(
         _DRIFT_HIST_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -405,7 +396,7 @@ ORDER BY event_type
     tags=("quality", "agg", "events"),
 )
 def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_freshness_sql("spark"))
 
 
@@ -468,7 +459,7 @@ ORDER BY d.day
     tags=("quality", "agg", "stats"),
 )
 def dq_rowcount_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
+    register_views(spark, sf_dir, ("events",))
     checkpointed(
         _RC_DAILY_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),

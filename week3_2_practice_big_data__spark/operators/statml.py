@@ -27,14 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..common import checkpointed
-from ..io import load_table
+from ..io import register_views
 from ..registry import register
 
 _N_BUCKETS = 20
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +72,7 @@ ORDER BY bucket
     tags=("agg", "stats"),
 )
 def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(_histogram_sql("spark"))
 
 
@@ -154,7 +150,7 @@ ORDER BY user_id, us, event_id
     tags=("window", "stats", "timeseries"),
 )
 def win_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_interpolate_sql("spark"))
 
 
@@ -250,7 +246,7 @@ FROM m ORDER BY l_returnflag
     tags=("agg", "stats"),
 )
 def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_skew_kurt_sql("spark"))
 
 
@@ -264,7 +260,7 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats", "ml"),
 )
 def ml_linreg_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_linreg_sql("spark"))
 
 
@@ -327,7 +323,7 @@ LIMIT 25
     tags=("agg", "join", "stats"),
 )
 def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_market_basket_sql("spark"))
 
 
@@ -396,7 +392,7 @@ ORDER BY user_id, us, event_id
     tags=("window", "stats", "timeseries"),
 )
 def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_rolling_corr_sql("spark"))
 
 
@@ -449,8 +445,7 @@ FROM m ORDER BY c_mktsegment
     tags=("agg", "stats"),
 )
 def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    _view(spark, sf_dir, "customer")
+    register_views(spark, sf_dir, ("orders", "customer"))
     return spark.sql(_gini_sql("spark"))
 
 
@@ -500,7 +495,7 @@ ORDER BY bar
     tags=("agg", "timeseries"),
 )
 def agg_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_ohlc_sql("spark"))
 
 
@@ -557,7 +552,7 @@ ORDER BY d.l_returnflag
     tags=("agg", "stats", "quality"),
 )
 def agg_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_mad_sql("spark"))
 
 
@@ -600,7 +595,7 @@ ORDER BY t.user_id
     tags=("agg", "stats"),
 )
 def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_entropy_sql("spark"))
 
 
@@ -700,7 +695,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize per (session, sf) across the whole text family
     from ..functions.text import cached_tokens_ref
 
-    _view(spark, sf_dir, "documents")
+    register_views(spark, sf_dir, ("documents",))
     return spark.sql(
         _naive_bayes_sql("spark", tok_ref=cached_tokens_ref(spark, sf_dir))
     )
@@ -762,7 +757,7 @@ ORDER BY o_orderstatus
     tags=("agg", "stats"),
 )
 def agg_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(_t_test_sql("spark"))
 
 
@@ -818,7 +813,7 @@ GROUP BY dims.nr, dims.nc
     tags=("agg", "stats"),
 )
 def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_chi2_sql("spark"))
 
 
@@ -898,7 +893,7 @@ def _bootstrap_for(dialect: str) -> str:
     tags=("agg", "stats", "sampling"),
 )
 def agg_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(_bootstrap_for("spark"))
 
 
@@ -957,7 +952,7 @@ FROM ss
     tags=("agg", "stats"),
 )
 def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(_anova_sql("spark"))
 
 # ---------------------------------------------------------------------------
@@ -1047,7 +1042,7 @@ ORDER BY true_label, pred_label
 def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.similarity import _cached_emb_norm
 
-    _view(spark, sf_dir, "embeddings")
+    register_views(spark, sf_dir, ("embeddings",))
     _cached_emb_norm(spark, sf_dir).createOrReplaceTempView("embeddings_norm")
     return spark.sql(
         _knn_classify_sql(
@@ -1087,7 +1082,7 @@ def _cached_stump_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by ml_decision_stump and ml_gbt_boost2 (r8)."""
     from ..common import session_key
 
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     df = checkpointed(
         _STUMP_HIST_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -1306,7 +1301,7 @@ ORDER BY bkt DESC
     tags=("ml", "agg", "stats"),
 )
 def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_lift_gains_sql("spark"))
 
 

@@ -22,13 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..io import load_table, register_views
 from ..registry import register
-
-
-def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +50,7 @@ ORDER BY p_partkey
     tags=("subquery",),
 )
 def qry_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("part",))
+    register_views(spark, sf_dir, ("part",))
     return spark.sql(_SCALAR_SQL)
 
 
@@ -83,7 +78,7 @@ ORDER BY c_custkey
     tags=("subquery",),
 )
 def qry_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_CORR_SCALAR_SQL)
 
 
@@ -114,7 +109,7 @@ ORDER BY c_custkey
     tags=("subquery",),
 )
 def qry_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_EXISTS_SQL)
 
 
@@ -157,7 +152,7 @@ SELECT
     tags=("subquery",),
 )
 def qry_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_IN_NULL_SQL)
 
 
@@ -189,7 +184,7 @@ ORDER BY c.c_custkey, l.o_orderkey
     tags=("subquery", "join"),
 )
 def qry_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_LATERAL_SQL)
 
 
@@ -227,7 +222,7 @@ ORDER BY depth
     tags=("subquery", "iterative"),
 )
 def qry_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("part",))
+    register_views(spark, sf_dir, ("part",))
     # The walk materializes ~n·log2(max key) rows in total, which is the
     # genuine work of the query — Spark's default 1M-row recursion safety
     # valve trips at sf1 (200k parts × ~18 levels ≈ 3.6M rows; found by
@@ -288,7 +283,7 @@ def _pipe_oracle() -> str:
     tags=("subquery", "function"),
 )
 def qry_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_PIPE_SPARK)
 
 
@@ -328,7 +323,7 @@ ORDER BY l_returnflag
     tags=("subquery", "function"),
 )
 def qry_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, ("lineitem",))
     body = """
 SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -400,7 +395,7 @@ ORDER BY o_orderpriority, o_orderstatus, n, max_key
     tags=("subquery", "function"),
 )
 def qry_modern_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(_sugar_sql("spark"))
 
 
@@ -433,7 +428,7 @@ WHERE o_orderkey > thr.v
     tags=("subquery", "function"),
 )
 def qry_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, ("orders",))
     spark.sql(
         "DECLARE OR REPLACE VARIABLE w32bd_thr BIGINT DEFAULT 0"
     )
@@ -478,7 +473,7 @@ FROM orders CROSS JOIN thr WHERE o_orderkey > thr.v
     tags=("subquery", "function", "iterative"),
 )
 def qry_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(
         """
 BEGIN
@@ -539,7 +534,7 @@ ORDER BY o_orderpriority
     tags=("subquery", "function"),
 )
 def qry_dynamic_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, ("orders",))
     spark.sql("DECLARE OR REPLACE VARIABLE w32bd_dyn_stmt STRING")
     spark.sql("""
 SET VAR w32bd_dyn_stmt =

@@ -23,16 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..io import load_table
+from ..common import _us
+from ..io import register_views
 from ..registry import register
-
-
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-
-
-def _us(dialect: str) -> str:
-    return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +73,7 @@ ORDER BY user_id, purchase_event_id
     tags=("join", "window", "timeseries"),
 )
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_asof_forward_sql("spark"))
 
 
@@ -146,7 +139,7 @@ ORDER BY user_id, purchase_event_id
     tags=("join", "window", "timeseries"),
 )
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_asof_nearest_sql("spark"))
 
 
@@ -198,7 +191,7 @@ ORDER BY user_id, us, event_id
     tags=("window", "timeseries", "stats"),
 )
 def win_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_ewma_sql("spark"))
 
 
@@ -246,7 +239,7 @@ ORDER BY user_id, us, event_id
     tags=("window", "timeseries", "stats"),
 )
 def win_distinct_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_distinct_rolling_sql("spark"))
 
 
@@ -305,7 +298,7 @@ ORDER BY g.user_id, g.day
     tags=("timeseries", "window"),
 )
 def ts_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_resample_fill_sql("spark"))
 
 
@@ -398,7 +391,7 @@ ORDER BY user_id, us, event_id
     tags=("timeseries", "window", "stats"),
 )
 def win_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_cusum_sql("spark"))
 
 
@@ -496,7 +489,7 @@ _LTTB_EV_CACHE: dict[tuple, DataFrame] = {}
 def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     checkpointed(
         _LTTB_EV_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -590,7 +583,7 @@ ORDER BY d
     tags=("timeseries", "window"),
 )
 def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_seasonal_sql("spark"))
 
 
@@ -697,7 +690,7 @@ _ACF_ORDERED_CACHE: dict[tuple, DataFrame] = {}
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     checkpointed(
         _ACF_ORDERED_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -840,7 +833,7 @@ _CCF_DAILY_CACHE: dict[tuple, DataFrame] = {}
 def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import checkpointed, session_key
 
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     checkpointed(
         _CCF_DAILY_CACHE,
         (session_key(spark), sf_dir.rstrip("/")),
@@ -862,7 +855,7 @@ def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "window"),
 )
 def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_drawdown_sql("spark"))
 
 
@@ -946,5 +939,5 @@ ORDER BY b60, event_type
     tags=("timeseries", "agg", "scale"),
 )
 def ts_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
+    register_views(spark, sf_dir, ("events",))
     return spark.sql(_rollup_multires_sql("spark"))

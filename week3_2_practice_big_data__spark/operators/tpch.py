@@ -19,13 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..io import register_views
 from ..registry import register
-
-
-def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +53,7 @@ ORDER BY o_orderpriority
     tags=("join", "agg", "tpch"),
 )
 def join_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders", "lineitem"))
+    register_views(spark, sf_dir, ("orders", "lineitem"))
     return spark.sql(_Q4_SQL)
 
 
@@ -101,7 +96,7 @@ ORDER BY supp_nation, cust_nation, l_year
     tags=("join", "agg", "tpch"),
 )
 def join_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
+    register_views(
         spark, sf_dir, ("supplier", "lineitem", "orders", "customer", "nation")
     )
     return spark.sql(_Q7_SQL)
@@ -141,7 +136,7 @@ LIMIT 20
     tags=("join", "agg", "tpch"),
 )
 def join_q10_returned_item(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders", "lineitem", "nation"))
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem", "nation"))
     return spark.sql(_Q10_SQL)
 
 
@@ -180,7 +175,7 @@ FROM (
     tags=("agg", "tpch"),
 )
 def agg_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part"))
+    register_views(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(_Q14_SQL)
 
 
@@ -213,7 +208,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_size
     tags=("agg", "join", "tpch"),
 )
 def agg_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part", "supplier"))
+    register_views(spark, sf_dir, ("lineitem", "part", "supplier"))
     return spark.sql(_Q16_SQL)
 
 
@@ -250,7 +245,7 @@ LIMIT 20
     tags=("agg", "join", "tpch"),
 )
 def agg_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders", "lineitem"))
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
     return spark.sql(_Q18_SQL)
 
 
@@ -297,7 +292,7 @@ def qry_q2_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The eligible relation is referenced twice (rows + correlated max);
     # Spark inlines CTEs, so materialize it once (CTE-inlining audit
     # discipline) — 10 scans → 0 on the tail.
-    _views(spark, sf_dir, ("part", "lineitem", "supplier", "nation", "region"))
+    register_views(spark, sf_dir, ("part", "lineitem", "supplier", "nation", "region"))
     body = _Q2_SQL.split("\n)\n", 1)
     eligible_sql = body[0].split("eligible AS (", 1)[1]
     spark.sql(eligible_sql).localCheckpoint(eager=True).createOrReplaceTempView(
@@ -338,7 +333,7 @@ ORDER BY custdist DESC, c_count DESC
     tags=("agg", "join", "tpch"),
 )
 def agg_q13_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_Q13_SQL)
 
 
@@ -372,7 +367,7 @@ WHERE p_brand = 'Brand#4' AND p_type = 'MEDIUM'
     tags=("agg", "subquery", "tpch"),
 )
 def agg_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part"))
+    register_views(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(_Q17_SQL)
 
 
@@ -423,7 +418,7 @@ def join_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per_os is referenced twice (per-order rollup + the final join);
     # materialize it once so the lineitem⋈orders aggregate runs a single
     # time under Spark's CTE inlining (6 scans → 2 + checkpoint).
-    _views(spark, sf_dir, ("lineitem", "orders", "supplier", "nation"))
+    register_views(spark, sf_dir, ("lineitem", "orders", "supplier", "nation"))
     per_os_sql = _Q21_SQL.split("per_os AS (", 1)[1].split("\n),\n", 1)[0]
     spark.sql(per_os_sql).localCheckpoint(eager=True).createOrReplaceTempView(
         "w32bd_q21_per_os"
@@ -471,7 +466,7 @@ ORDER BY cntrycode
     tags=("qry", "agg", "subquery", "tpch"),
 )
 def qry_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_Q22_SQL)
 
 
@@ -503,7 +498,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     tags=("agg", "scan", "tpch"),
 )
 def agg_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(_Q6_SQL)
 
 
@@ -550,7 +545,7 @@ ORDER BY o_year
     tags=("join", "agg", "tpch"),
 )
 def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
+    register_views(
         spark, sf_dir,
         ("lineitem", "part", "supplier", "orders", "customer", "nation",
          "region"),
@@ -594,7 +589,7 @@ ORDER BY s_suppkey
     tags=("agg", "subquery", "tpch"),
 )
 def agg_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "supplier"))
+    register_views(spark, sf_dir, ("lineitem", "supplier"))
     rev_sql = _Q15_SQL.split("revenue AS (", 1)[1].split("\n)\n", 1)[0]
     spark.sql(rev_sql).localCheckpoint(eager=True).createOrReplaceTempView(
         "w32bd_q15_revenue"
@@ -637,7 +632,7 @@ WHERE
     tags=("join", "agg", "tpch"),
 )
 def join_q19_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part"))
+    register_views(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(_Q19_SQL)
 
 
@@ -682,7 +677,7 @@ ORDER BY nation, o_year DESC
     tags=("join", "agg", "tpch"),
 )
 def join_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
+    register_views(
         spark, sf_dir, ("lineitem", "part", "supplier", "nation", "orders")
     )
     return spark.sql(_Q9_SQL)
@@ -730,7 +725,7 @@ ORDER BY part_value DESC, l_partkey
 def agg_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partval feeds both the row set and the global threshold; Spark
     # inlines CTEs, so materialize it once (CTE-inlining discipline).
-    _views(spark, sf_dir, ("lineitem", "supplier", "nation"))
+    register_views(spark, sf_dir, ("lineitem", "supplier", "nation"))
     pv_sql = _Q11_SQL.split("partval AS (", 1)[1].split("\n)\n", 1)[0]
     spark.sql(pv_sql).localCheckpoint(eager=True).createOrReplaceTempView(
         "w32bd_q11_partval"
@@ -778,7 +773,7 @@ ORDER BY delay_class
     tags=("join", "agg", "tpch"),
 )
 def join_q12_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "orders"))
+    register_views(spark, sf_dir, ("lineitem", "orders"))
     return spark.sql(_Q12_SQL)
 
 
@@ -818,5 +813,5 @@ ORDER BY s_name
     tags=("join", "agg", "subquery", "tpch"),
 )
 def join_q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("supplier", "nation", "lineitem", "part"))
+    register_views(spark, sf_dir, ("supplier", "nation", "lineitem", "part"))
     return spark.sql(_Q20_SQL)

@@ -470,7 +470,7 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import _stream_shuffle
+    from ..streaming.streams import _memory_sink, _run_stream
 
     ensure_package_on_workers(spark)
     n, chunk, seed = _PYDSS_N, _PYDSS_CHUNK, _PYDSS_SEED
@@ -521,35 +521,23 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _LcgStreamReader()
 
     spark.dataSource.register(_LcgStreamSource)
-    qname = "w32bd_pydss"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.format("w32bd_lcg_stream")
-            .load()
-            .withColumn("ts", F.timestamp_seconds(F.col("ts_sec")))
-            .withWatermark("ts", f"{_PYDSS_DELAY_S} seconds")
-            .groupBy(F.window("ts", "600 seconds"), "sensor_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sum_x"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "sensor_id",
-                "n",
-                "sum_x",
-            )
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .start()
+    windows = (
+        spark.readStream.format("w32bd_lcg_stream")
+        .load()
+        .withColumn("ts", F.timestamp_seconds(F.col("ts_sec")))
+        .withWatermark("ts", f"{_PYDSS_DELAY_S} seconds")
+        .groupBy(F.window("ts", "600 seconds"), "sensor_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sum_x"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "sensor_id",
+            "n",
+            "sum_x",
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+    )
+    _run_stream(spark, "w32bd_pydss", windows, _memory_sink())
     return (
-        spark.table(qname)
+        spark.table("w32bd_pydss")
         .filter(F.col("sensor_id") >= 0)
         .orderBy("win_start", "sensor_id")
     )
@@ -734,7 +722,6 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
 
-    from pyspark.sql import functions as F
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamWriter,
@@ -744,9 +731,10 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..common import scratch_dir
     from ..session import ensure_package_on_workers
     from ..streaming.streams import (
-        _WATERMARK,
         _chunked_source,
-        _stream_shuffle,
+        _file_stream,
+        _finalized_windows,
+        _run_stream,
     )
 
     ensure_package_on_workers(spark)
@@ -809,46 +797,25 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
             return _JsonlStreamWriter(self.options["path"])
 
     spark.dataSource.register(_JsonlStreamSink)
-    qname = "w32bd_pydsk"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): output = manifest-committed union =
-            # windows finalized by the FINAL watermark — invariant to the
-            # chunk→batch grouping (see streams._run_stream).
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            # coalesce(1) (r14, guide §4): each staged file is one Python
-            # writer-task round trip per epoch; the finalized rows per
-            # epoch are a handful — one task stages them all. Committed
-            # row union unchanged; the two-phase commit contract (stage →
-            # per-batch manifest) is exercised identically.
-            .coalesce(1)
-            .writeStream.format("w32bd_jsonl_stream_sink")
+    # 2 files/trigger (r14): output = manifest-committed union = windows
+    # finalized by the FINAL watermark — invariant to the chunk→batch
+    # grouping (see streams._file_stream). coalesce(1) (r14, guide §4):
+    # each staged file is one Python writer-task round trip per epoch;
+    # the finalized rows per epoch are a handful — one task stages them
+    # all. Committed row union unchanged; the two-phase commit contract
+    # (stage → per-batch manifest) is exercised identically.
+    windows = _finalized_windows(
+        _file_stream(spark, src, ev.schema, max_files=2)
+    ).coalesce(1)
+    _run_stream(
+        spark, "w32bd_pydsk", windows,
+        lambda w: (
+            w.format("w32bd_jsonl_stream_sink")
             .option("path", out)
-            .option(
-                "checkpointLocation", os.path.join(out, "_ckpt")
-            )
+            .option("checkpointLocation", os.path.join(out, "_ckpt"))
             .outputMode("append")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        ),
+    )
     rows = []
     for entry in sorted(os.listdir(out)):
         if not entry.startswith("_MANIFEST_"):
@@ -1215,7 +1182,6 @@ def stream_python_datasource_sink_arrow(
     import os
     import shutil
 
-    from pyspark.sql import functions as F
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamArrowWriter,
@@ -1225,9 +1191,10 @@ def stream_python_datasource_sink_arrow(
     from ..common import scratch_dir
     from ..session import ensure_package_on_workers
     from ..streaming.streams import (
-        _WATERMARK,
         _chunked_source,
-        _stream_shuffle,
+        _file_stream,
+        _finalized_windows,
+        _run_stream,
     )
 
     ensure_package_on_workers(spark)
@@ -1307,39 +1274,21 @@ def stream_python_datasource_sink_arrow(
             return _ArrowStreamWriter(self.options["path"])
 
     spark.dataSource.register(_ArrowStreamSink)
-    qname = "w32bd_pydska"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger + coalesce(1) (r14): same argument as the
-            # row-writer twin — committed union invariant, one Arrow
-            # writer round trip per epoch instead of four.
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            .coalesce(1)
-            .writeStream.format("w32bd_jsonl_stream_arrow_sink")
+    # 2 files/trigger + coalesce(1) (r14): same argument as the
+    # row-writer twin — committed union invariant, one Arrow writer round
+    # trip per epoch instead of four.
+    windows = _finalized_windows(
+        _file_stream(spark, src, ev.schema, max_files=2)
+    ).coalesce(1)
+    _run_stream(
+        spark, "w32bd_pydska", windows,
+        lambda w: (
+            w.format("w32bd_jsonl_stream_arrow_sink")
             .option("path", out)
             .option("checkpointLocation", os.path.join(out, "_ckpt"))
             .outputMode("append")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        ),
+    )
     rows = []
     for entry in sorted(os.listdir(out)):
         if not entry.startswith("_MANIFEST_"):

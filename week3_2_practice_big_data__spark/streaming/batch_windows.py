@@ -29,10 +29,6 @@ _SLIDE_S = 300  # 5-minute slide
 from ..operators.analytics import _GAP_US  # 5-minute session gap (one definition)
 
 
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-
-
 _TUMBLING_ORACLE = f"""
 SELECT
   CAST(floor(epoch(ts) / {_WIN_S}) AS BIGINT) * {_WIN_S} AS win_start,

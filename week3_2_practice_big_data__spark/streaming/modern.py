@@ -18,19 +18,20 @@ asserting totals against the batch aggregation of the same source.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
+from ..common import _scoped_conf
 from ..io import load_table
 from ..registry import register
 from ..session import ensure_package_on_workers
-from .streams import _chunked_source
-
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+from .streams import (
+    _ROCKSDB_PROVIDER,
+    _chunked_source,
+    _file_stream,
+    _memory_sink,
+    _run_stream,
 )
 
 try:  # Spark >= 4.0 AND a usable protobuf: transformWithStateInPandas runs
@@ -86,23 +87,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "tws", dup_first=0)
-    # Session conf is shared with every later streaming key: remember the
-    # prior provider so it can be restored after the query stops.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prior_provider = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        prior_provider = None
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-
-    for q in spark.streams.active:
-        if q.name == "w32bd_tws":
-            q.stop()
-    query = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    totals = (
+        _file_stream(spark, src, ev.schema)
         .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=_RunningTotals(),
@@ -110,17 +96,15 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        .writeStream.format("memory")
-        .queryName("w32bd_tws")
-        .outputMode("update")
-        .start()
     )
-    query.processAllAvailable()
-    query.stop()
-    if prior_provider is not None:
-        spark.conf.set(_PROVIDER_KEY, prior_provider)
-    else:
-        spark.conf.unset(_PROVIDER_KEY)
+    # Session conf is shared with every later streaming key: the provider
+    # is scoped to this query, restored (or unset) even if it fails.
+    provider = {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}
+    with _scoped_conf(spark, provider):
+        _run_stream(
+            spark, "w32bd_tws", totals, _memory_sink("update"),
+            python_stateful=True,
+        )
     # update-mode sink holds one row per (batch, user); the final state per
     # user is its last (largest n_events) update.
     from pyspark.sql.window import Window
@@ -175,25 +159,21 @@ FROM events GROUP BY event_type ORDER BY event_type
 def stream_trigger_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "anow", dup_first=0)
-
-    for q in spark.streams.active:
-        if q.name == "w32bd_anow":
-            q.stop()
-    query = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    totals = (
+        _file_stream(spark, src, ev.schema)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.expr(synth.sum_micro("value")).alias("sum_value"),
         )
-        .writeStream.format("memory")
-        .queryName("w32bd_anow")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    # The default drain suffices: an AvailableNow query stops itself once
+    # the backlog is processed, and processAllAvailable returns then.
+    _run_stream(
+        spark, "w32bd_anow", totals,
+        lambda w: (
+            w.format("memory").outputMode("complete")
+            .trigger(availableNow=True)
+        ),
+    )
     return spark.table("w32bd_anow").orderBy("event_type")

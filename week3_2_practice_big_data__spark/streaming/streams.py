@@ -21,9 +21,10 @@ import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from .. import synth
-from ..common import build_once
+from ..common import _scoped_conf, build_once
 from ..io import load_table
 from ..registry import register
 from ..operators.analytics import _GAP_US as _SESS_GAP_US
@@ -58,28 +59,6 @@ def _stream_partitions(
     if python_stateful:
         return max(8, base // 4)
     return max(4, base // 8)
-
-
-class _stream_shuffle:
-    """Scoped shuffle-partition override for a streaming query's lifetime
-    (numShufflePartitions is captured from the session conf when the
-    query plans its first batch; restored on exit for the batch keys)."""
-
-    def __init__(self, spark: SparkSession, python_stateful: bool = False):
-        self._spark = spark
-        self._python_stateful = python_stateful
-
-    def __enter__(self):
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_partitions(self._spark, self._python_stateful)),
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-        return False
 
 
 # Far-future sentinel offset (30 min past max real ts): final watermark =
@@ -197,15 +176,12 @@ def _pid_run_dir(prefix: str, sf_dir: str) -> str:
     return mine
 
 
-def _run_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    transform,
-    name: str,
-    max_files: int = 1,
+def _file_stream(
+    spark: SparkSession, src: str, schema, max_files: int = 1
 ) -> DataFrame:
-    """max_files (r14, guide §1/§2 fixed-cost class): every micro-batch
+    """The chunked parquet source, `max_files` chunk files per trigger.
+
+    max_files (r14, guide §1/§2 fixed-cost class): every micro-batch
     pays trigger + state-store-commit machinery regardless of data, so
     keys whose RESULT is a pure function of the final watermark (append
     union is cumulative-monotone; no oracle encodes the chunk→batch
@@ -213,26 +189,79 @@ def _run_stream(
     output (hash-proven per key at 3 SFs). Keys whose oracle or
     demonstration depends on per-chunk batching (dedup replay ordering,
     sentinel-driven eviction, n_updates progressions) stay at 1."""
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = (
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files)
         .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
+        .parquet(src)
     )
-    with _stream_shuffle(spark):
-        query = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
+
+
+def _memory_sink(mode: str = "append"):
+    """`_run_stream` sink: the in-memory table named after the query."""
+    return lambda w: w.format("memory").outputMode(mode)
+
+
+def _parquet_sink(path: str, ckpt: str):
+    """`_run_stream` sink: an append-mode parquet directory with its
+    checkpoint (the exactly-once file sink)."""
+    return lambda w: (
+        w.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+    )
+
+
+def _run_stream(
+    spark: SparkSession,
+    name: str,
+    stream: DataFrame,
+    sink,
+    python_stateful: bool = False,
+    wait=None,
+) -> StreamingQuery:
+    """Run one streaming query to completion — the only place the
+    engine starts one. Stops a stale query of the same `name`, starts
+    `stream` through `sink` (a callable configuring the
+    DataStreamWriter: format, mode, options, trigger) under the stream
+    shuffle width (`_stream_partitions`; numShufflePartitions is
+    captured from the session conf when the query starts, and the batch
+    keys get their width back on exit), drains it, and stops it in
+    `finally`. `wait(query, drain)` replaces the default drain (the
+    query's processAllAvailable) for sources it cannot bound. Returns
+    the stopped query: its `id` and `recentProgress` stay readable."""
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    width = str(_stream_partitions(spark, python_stateful))
+    with _scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
+        query = sink(stream.writeStream.queryName(name)).start()
+        try:
+            if wait is None:
+                query.processAllAvailable()
+            else:
+                wait(query, query.processAllAvailable)
+        finally:
+            query.stop()
+    return query
+
+
+def _finalized_windows(s: DataFrame) -> DataFrame:
+    """The watermarked 10-minute tumbling count (append mode emits the
+    windows the watermark finalized) — the topology of
+    stream_watermark_late and of every sink/provider/source variant
+    checked against its oracle."""
+    return (
+        s.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name)
+    )
 
 
 # Batch-equivalence oracle under LOCKSTEP IN-ORDER ARRIVAL (r5, the
@@ -278,27 +307,14 @@ ORDER BY win_start, event_type
 def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "wm", dup_first=0)
-
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-        )
-
     # max_files=2 (r14): the emitted set is windows with end <= FINAL
     # watermark — a cumulative-monotone union invariant to how the four
     # ts-ordered chunks batch (watermark still advances across the two
     # data batches; the final finalization rides the same trailing
     # no-data batch it always did). Hash-proven identical at 3 SFs.
-    return _run_stream(
-        spark, src, ev.schema, transform, "w32bd_wm", max_files=2
-    ).orderBy("win_start", "event_type")
+    stream = _file_stream(spark, src, ev.schema, max_files=2)
+    _run_stream(spark, "w32bd_wm", _finalized_windows(stream), _memory_sink())
+    return spark.table("w32bd_wm").orderBy("win_start", "event_type")
 
 
 # Batch-equivalence oracle under lockstep arrival (r5): the four main
@@ -328,17 +344,14 @@ SELECT event_id, user_id, event_type FROM events ORDER BY event_id
 def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "dedup", dup_first=100)
-
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .dropDuplicates(["event_id"])
-            .select("event_id", "user_id", "event_type")
-        )
-
-    return _run_stream(spark, src, ev.schema, transform, "w32bd_dedup").orderBy(
-        "event_id"
+    deduped = (
+        _file_stream(spark, src, ev.schema)
+        .withWatermark("ts", _WATERMARK)
+        .dropDuplicates(["event_id"])
+        .select("event_id", "user_id", "event_type")
     )
+    _run_stream(spark, "w32bd_dedup", deduped, _memory_sink())
+    return spark.table("w32bd_dedup").orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -404,29 +417,17 @@ def stream_tumbling_file_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "tfr", dup_first=0)
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_tfr":
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .groupBy(F.window("ts", "86400 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            .writeStream.format("memory")
-            .queryName("w32bd_tfr")
-            .outputMode("update")
-            .start()
+    daily = (
+        _file_stream(spark, src, ev.schema)
+        .groupBy(F.window("ts", "86400 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        query.processAllAvailable()
-        query.stop()
+    )
+    _run_stream(spark, "w32bd_tfr", daily, _memory_sink("update"))
     # Update-mode sink: one row per (micro-batch, window) update carrying
     # the cumulative count — the final value is the max, the row count is
     # the number of batches that touched the window.
@@ -511,39 +512,27 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    def transform(s):
-        return s.groupBy("user_id").applyInPandasWithState(
+    # 2 files/trigger (r14): the exact-BIGINT state makes the final
+    # per-user fold batching-free (the oracle's point), and the builder
+    # keeps only each user's max-n_events row — so halving the batch
+    # count halves the per-(batch, group) Python round-trips and state
+    # (de)serialization while state still provably crosses a batch
+    # boundary. Hash-proven identical at 3 SFs.
+    totals = (
+        _file_stream(spark, src, ev.schema, max_files=2)
+        .groupBy("user_id")
+        .applyInPandasWithState(
             update,
             outputStructType="user_id bigint, n_events bigint, sum_value double",
             stateStructType="n bigint, total bigint",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-
-    for q in spark.streams.active:
-        if q.name == "w32bd_state":
-            q.stop()
-    with _stream_shuffle(spark, python_stateful=True):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): the exact-BIGINT state makes the
-            # final per-user fold batching-free (the oracle's point), and
-            # the builder keeps only each user's max-n_events row — so
-            # halving the batch count halves the per-(batch, group)
-            # Python round-trips and state (de)serialization while state
-            # still provably crosses a batch boundary. Hash-proven
-            # identical at 3 SFs.
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .transform(transform)
-            .writeStream.format("memory")
-            .queryName("w32bd_state")
-            .outputMode("update")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
+    )
+    _run_stream(
+        spark, "w32bd_state", totals, _memory_sink("update"),
+        python_stateful=True,
+    )
     # update-mode memory sink appends one row per (batch, user) — keep the
     # final state per user (max n_events is the last update).
     final = spark.table("w32bd_state")
@@ -622,20 +611,10 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink)
         )
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_feb":
-            q.stop()
-    query = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .queryName("w32bd_feb")
-        .start()
+    _run_stream(
+        spark, "w32bd_feb", _file_stream(spark, src, ev.schema),
+        lambda w: w.foreachBatch(handle_batch),
     )
-    query.processAllAvailable()
-    query.stop()
     from pyspark.sql.window import Window
 
     return (
@@ -670,6 +649,39 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SSJ_RANGE_MIN = 360
+_SSJ_ON = (
+    "click_user = user_id AND view_ts >= click_ts "
+    f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
+)
+
+
+def _click_view_sides(
+    spark: SparkSession, src: str, schema, max_files: int = 1
+) -> tuple[DataFrame, DataFrame]:
+    """The watermarked click and view sides of the range joins: two
+    readers over the SAME chunk files, so they advance in lockstep."""
+    clicks = (
+        _file_stream(spark, src, schema, max_files)
+        .filter(F.col("event_type") == "click")
+        .withWatermark("ts", _WATERMARK)
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("click_user"),
+            F.col("ts").alias("click_ts"),
+        )
+    )
+    views = (
+        _file_stream(spark, src, schema, max_files)
+        .filter(F.col("event_type") == "view")
+        .withWatermark("ts", _WATERMARK)
+        .select(
+            F.col("event_id").alias("view_id"),
+            "user_id",
+            F.col("ts").alias("view_ts"),
+        )
+    )
+    return clicks, views
+
 
 _SSJ_ORACLE = f"""
 SELECT a.event_id AS click_id, b.event_id AS view_id, a.user_id,
@@ -693,61 +705,15 @@ ORDER BY click_id, view_id
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "ssj", dup_first=0)
-    name = "w32bd_ssj"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-
-    def side():
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    views = (
-        side()
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"click_user = user_id AND view_ts >= click_ts "
-            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
-        ),
-    ).select(
+    clicks, views = _click_view_sides(spark, src, ev.schema)
+    joined = clicks.join(views, F.expr(_SSJ_ON)).select(
         "click_id",
         "view_id",
         "user_id",
         (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    with _stream_shuffle(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name).orderBy("click_id", "view_id")
+    _run_stream(spark, "w32bd_ssj", joined, _memory_sink())
+    return spark.table("w32bd_ssj").orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -822,62 +788,15 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ([s90,s91] advances the wm to final, [s92] evicts). For THIS key
     # (1 file/trigger) it is one extra no-op data batch.
     src = _chunked_source(spark, sf_dir, "ssoj", sentinels=3)
-    name = "w32bd_ssoj"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-
-    def side():
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    views = (
-        side()
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"click_user = user_id AND view_ts >= click_ts "
-            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
-        ),
-        "leftOuter",
-    ).select(
+    clicks, views = _click_view_sides(spark, src, ev.schema)
+    joined = clicks.join(views, F.expr(_SSJ_ON), "leftOuter").select(
         "click_id",
         "view_id",
         F.col("click_user").alias("user_id"),
         (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    with _stream_shuffle(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name).orderBy("click_id", "view_id")
+    _run_stream(spark, "w32bd_ssoj", joined, _memory_sink())
+    return spark.table("w32bd_ssoj").orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -941,54 +860,15 @@ ORDER BY win_start
 def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "ssoj", sentinels=3)
-    name = "w32bd_scja"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-
-    def side():
-        return (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): batches [c0,c1],[c2,c3],[s90,s91],
-            # [s92] — the identical-ts sentinel chunks mean [s90,s91]
-            # advances the global watermark to its final value and [s92]
-            # is the data batch that runs the last eviction/finalization,
-            # exactly the r8 sentinel discipline at half the batch count.
-            # Emitted set = windows with end <= final wm - range, a pure
-            # function of the FINAL watermark — batching-invariant
-            # (hash-proven at 3 SFs).
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    views = (
-        side()
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"click_user = user_id AND view_ts >= click_ts "
-            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
-        ),
-    ).select(
+    # 2 files/trigger (r14): batches [c0,c1],[c2,c3],[s90,s91],[s92] —
+    # the identical-ts sentinel chunks mean [s90,s91] advances the global
+    # watermark to its final value and [s92] is the data batch that runs
+    # the last eviction/finalization, exactly the r8 sentinel discipline
+    # at half the batch count. Emitted set = windows with end <= final
+    # wm - range, a pure function of the FINAL watermark —
+    # batching-invariant (hash-proven at 3 SFs).
+    clicks, views = _click_view_sides(spark, src, ev.schema, max_files=2)
+    joined = clicks.join(views, F.expr(_SSJ_ON)).select(
         "click_ts",
         (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
@@ -1004,16 +884,8 @@ def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_gap_us",
         )
     )
-    with _stream_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name).orderBy("win_start")
+    _run_stream(spark, "w32bd_scja", agg, _memory_sink())
+    return spark.table("w32bd_scja").orderBy("win_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1055,16 +927,14 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "c_name")
     )
 
-    def transform(s):
-        return (
-            s.alias("e")
-            .join(F.broadcast(dim.alias("c")), F.expr("e.user_id = c.c_custkey"))
-            .select("e.event_id", "e.user_id", "e.event_type", "c.c_name", "e.value")
-        )
-
-    return _run_stream(spark, src, ev.schema, transform, "w32bd_sstatic").orderBy(
-        "event_id"
+    enriched = (
+        _file_stream(spark, src, ev.schema)
+        .alias("e")
+        .join(F.broadcast(dim.alias("c")), F.expr("e.user_id = c.c_custkey"))
+        .select("e.event_id", "e.user_id", "e.event_type", "c.c_name", "e.value")
     )
+    _run_stream(spark, "w32bd_sstatic", enriched, _memory_sink())
+    return spark.table("w32bd_sstatic").orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1100,32 +970,11 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_psink":
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName("w32bd_psink")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
+    _run_stream(
+        spark, "w32bd_psink",
+        _finalized_windows(_file_stream(spark, src, ev.schema)),
+        _parquet_sink(sink, ckpt),
+    )
     return spark.read.parquet(sink).orderBy("win_start", "event_type")
 
 
@@ -1152,25 +1001,18 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     del sf_dir  # generator source; scale-independent by design
     import time
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_rate":
-            q.stop()
-    query = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 500)
-        .load()
-        .select("value")
-        .writeStream.format("memory")
-        .queryName("w32bd_rate")
-        .outputMode("append")
-        .start()
+    def wait(query, drain) -> None:
+        # an unbounded source never drains: poll the sink instead
+        deadline = time.time() + 10.0
+        while time.time() < deadline:
+            if spark.table("w32bd_rate").count() >= 500:
+                break
+            time.sleep(0.25)
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 500).load()
+    _run_stream(
+        spark, "w32bd_rate", rate.select("value"), _memory_sink(), wait=wait
     )
-    deadline = time.time() + 10.0
-    while time.time() < deadline:
-        if spark.table("w32bd_rate").count() >= 500:
-            break
-        time.sleep(0.25)
-    query.stop()
     return spark.table("w32bd_rate").select(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((F.col("value") % 2 == 0).cast("int")).alias("n_even"),
@@ -1271,9 +1113,6 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
     thread = threading.Thread(target=serve, daemon=True)
     thread.start()
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_sock":
-            q.stop()
     lines = (
         spark.readStream.format("socket")
         .option("host", "127.0.0.1")
@@ -1288,56 +1127,36 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_micros(F.col("p")[0].cast("bigint")).alias("ts"),
         F.col("p")[1].alias("event_type"),
     )
-    # ADVICE r8: the whole build/start/poll lives INSIDE the context
-    # manager so the shuffle-width override is restored even when plan
-    # construction or writeStream.start() raises — a manual __enter__
-    # with __exit__ only in the post-start finally leaked the streaming
-    # width (8) into every subsequent batch key's session on failure.
-    query = None
+
+    def wait(query, drain) -> None:
+        sent.wait(timeout=60.0)
+        # The socket source ingests on its own receiver thread, so a
+        # drain only covers bytes already buffered: poll until the
+        # cumulative source input reaches the served row count (then
+        # drain once more so the no-data batch flushes watermark state).
+        deadline = time.time() + 120.0
+        # recentProgress is a CAPPED ring buffer (~100 entries, ADVICE
+        # r6): re-summing it undercounts forever once input-bearing
+        # entries are evicted by later no-data batches. Accumulate
+        # per-batch input counts across polls in Python instead — a
+        # batch's count is recorded the first poll after it appears, so
+        # eviction can only drop entries already counted.
+        batch_rows: dict[int, int] = {}
+        while time.time() < deadline:
+            drain()
+            for p in query.recentProgress:
+                batch_rows[int(p["batchId"])] = int(p["numInputRows"])
+            if sum(batch_rows.values()) >= n_events:
+                break
+            time.sleep(0.2)
+        drain()
+
     try:
-        with _stream_shuffle(spark):
-            query = (
-                parsed.withWatermark("ts", _WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.unix_timestamp(F.col("window.start")).alias(
-                        "win_start"
-                    ),
-                    "event_type",
-                    "n",
-                )
-                .writeStream.format("memory")
-                .queryName("w32bd_sock")
-                .outputMode("append")
-                .start()
-            )
-            sent.wait(timeout=60.0)
-            # The socket source ingests on its own receiver thread, so
-            # processAllAvailable() only covers bytes already buffered:
-            # poll until the cumulative source input reaches the served
-            # row count (then once more so the no-data batch flushes
-            # watermark state).
-            deadline = time.time() + 120.0
-            # recentProgress is a CAPPED ring buffer (~100 entries,
-            # ADVICE r6): re-summing it undercounts forever once
-            # input-bearing entries are evicted by later no-data
-            # batches. Accumulate per-batch input counts across polls
-            # in Python instead — a batch's count is recorded the first
-            # poll after it appears, so eviction can only drop entries
-            # already counted.
-            batch_rows: dict[int, int] = {}
-            while time.time() < deadline:
-                query.processAllAvailable()
-                for p in query.recentProgress:
-                    batch_rows[int(p["batchId"])] = int(p["numInputRows"])
-                if sum(batch_rows.values()) >= n_events:
-                    break
-                time.sleep(0.2)
-            query.processAllAvailable()
+        _run_stream(
+            spark, "w32bd_sock", _finalized_windows(parsed), _memory_sink(),
+            wait=wait,
+        )
     finally:
-        if query is not None:
-            query.stop()
         done.set()
         try:
             server.close()
@@ -1438,8 +1257,10 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    def transform(s):
-        return s.groupBy("user_id").applyInPandasWithState(
+    patterns = (
+        _file_stream(spark, src, ev.schema)
+        .groupBy("user_id")
+        .applyInPandasWithState(
             update,
             outputStructType=(
                 "user_id bigint, n_seen bigint, n_strict_conversions "
@@ -1453,24 +1274,11 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-
-    for q in spark.streams.active:
-        if q.name == "w32bd_cep":
-            q.stop()
-    with _stream_shuffle(spark, python_stateful=True):
-        query = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .transform(transform)
-            .writeStream.format("memory")
-            .queryName("w32bd_cep")
-            .outputMode("update")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
+    )
+    _run_stream(
+        spark, "w32bd_cep", patterns, _memory_sink("update"),
+        python_stateful=True,
+    )
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
@@ -1587,11 +1395,11 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set = sessions with end <= final wm, batching-invariant
     # (hash-proven at 3 SFs + the crafted merge/boundary fixture).
     src = _chunked_source(spark, sf_dir, "sessnat", sentinels=3)
-    out = _run_stream(
-        spark, src, ev.schema, _session_native_transform, "w32bd_sessnat",
-        max_files=2,
+    sessions = _session_native_transform(
+        _file_stream(spark, src, ev.schema, max_files=2)
     )
-    return out.filter(F.col("user_id") >= 0).orderBy(
+    _run_stream(spark, "w32bd_sessnat", sessions, _memory_sink())
+    return spark.table("w32bd_sessnat").filter(F.col("user_id") >= 0).orderBy(
         "user_id", "session_start_us"
     )
 
@@ -1633,16 +1441,14 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "dedupww", dup_first=100)
 
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .select("event_id", "user_id", "event_type")
-        )
-
-    return _run_stream(
-        spark, src, ev.schema, transform, "w32bd_dedupww"
-    ).orderBy("event_id")
+    deduped = (
+        _file_stream(spark, src, ev.schema)
+        .withWatermark("ts", _WATERMARK)
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id", "user_id", "event_type")
+    )
+    _run_stream(spark, "w32bd_dedupww", deduped, _memory_sink())
+    return spark.table("w32bd_dedupww").orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1702,39 +1508,11 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.copytree(os.path.join(src, d), dst)
 
     def _life():
-        for q in spark.streams.active:
-            if q.name == "w32bd_ckres":
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(stage)
-                .withWatermark("ts", _WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.unix_timestamp(F.col("window.start")).alias(
-                        "win_start"
-                    ),
-                    "event_type",
-                    "n",
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .queryName("w32bd_ckres")
-                .start()
-            )
-            # try/finally (ADVICE r9): a processAllAvailable failure
-            # mid-batch must not leave the query holding the checkpoint
-            # and sink while a later invocation rmtree's the scratch.
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        _run_stream(
+            spark, "w32bd_ckres",
+            _finalized_windows(_file_stream(spark, stage, ev.schema)),
+            _parquet_sink(sink, ckpt),
+        )
 
     _reveal(chunks[:half])  # life 1: first half of the timeline
     _life()
@@ -1764,7 +1542,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The progress buffer holds the last 100 updates and this topology
 # produces exactly one data batch per chunk file (maxFilesPerTrigger=1,
 # _CHUNKS=4) plus at most a trailing no-data batch — far inside the cap,
-# so recentProgress is a complete record (read before stop()).
+# so recentProgress is a complete record (still readable after stop()).
 # ---------------------------------------------------------------------------
 
 _STREAM_OBS_ORACLE = f"""
@@ -1794,20 +1572,11 @@ FROM events
 def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "obsm", dup_first=0)
-    name = "w32bd_obsm"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        # 2 files/trigger (r14): per-batch metric terms are summed /
-        # min-max-merged across batches, so the totals are invariant to
-        # the chunk→batch grouping; two data batches still exercise the
-        # cross-batch merge while halving trigger+commit fixed cost.
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    # 2 files/trigger (r14): per-batch metric terms are summed /
+    # min-max-merged across batches, so the totals are invariant to the
+    # chunk→batch grouping; two data batches still exercise the
+    # cross-batch merge while halving trigger+commit fixed cost.
+    stream = _file_stream(spark, src, ev.schema, max_files=2)
     observed = stream.observe(
         "w32bd_obsm_metrics",
         F.count(F.lit(1)).alias("n_rows"),
@@ -1825,23 +1594,14 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
     )
-    with _stream_shuffle(spark):
-        query = (
-            observed.withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-            progresses = list(query.recentProgress)
-        finally:
-            query.stop()
+    windows = (
+        observed.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    query = _run_stream(spark, "w32bd_obsm", windows, _memory_sink())
     per_batch = []
-    for p in progresses:
+    for p in query.recentProgress:
         om = (p.get("observedMetrics") or {}).get("w32bd_obsm_metrics")
         if om is not None:
             per_batch.append(om)
@@ -1928,7 +1688,6 @@ def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     main = [d for d in chunks if "_dups" not in d and "_sent" not in d]
     half = max(1, len(main) // 2)
-    qname = "w32bd_spe2e"
 
     def _reveal(names):
         for d in names:
@@ -1937,37 +1696,21 @@ def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.copytree(os.path.join(src, d), dst)
 
     def _life():
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                _pipeline_e2e_transform(
-                    spark.readStream.schema(ev.schema)
-                    # 2 files/trigger (r14): the exactly-once argument is
-                    # per-ROW and batching-independent (each replayed row
-                    # is late-dropped OR dedup-filtered whichever batch
-                    # carries it), sessions finalize against the FINAL
-                    # watermark, and the two sentinel chunks still land
-                    # so the last eviction rides a data batch (the second
-                    # sentinel file forms its own trailing batch: 5
-                    # life-2 files -> ceil(5/2) batches). Hash-proven at
-                    # 3 SFs + the crafted restart fixture.
-                    .option("maxFilesPerTrigger", 2)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(stage)
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .queryName(qname)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        # 2 files/trigger (r14): the exactly-once argument is per-ROW and
+        # batching-independent (each replayed row is late-dropped OR
+        # dedup-filtered whichever batch carries it), sessions finalize
+        # against the FINAL watermark, and the two sentinel chunks still
+        # land so the last eviction rides a data batch (the second
+        # sentinel file forms its own trailing batch: 5 life-2 files ->
+        # ceil(5/2) batches). Hash-proven at 3 SFs + the crafted restart
+        # fixture.
+        _run_stream(
+            spark, "w32bd_spe2e",
+            _pipeline_e2e_transform(
+                _file_stream(spark, stage, ev.schema, max_files=2)
+            ),
+            _parquet_sink(sink, ckpt),
+        )
 
     _reveal(main[:half])  # life 1: first half of the real timeline
     _life()
@@ -2081,35 +1824,20 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
         def onQueryTerminated(self, event):
             self.terminated.append(str(event.id))
 
+    # 2 files/trigger (r14): the key's output is the summed numInputRows
+    # across the query's progress events — invariant to batching; still
+    # multiple progress events.
+    windows = (
+        _file_stream(spark, src, ev.schema, max_files=2)
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     collector = _Collector()
     spark.streams.addListener(collector)
-    name = "w32bd_qlist"
     try:
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                spark.readStream.schema(ev.schema)
-                # 2 files/trigger (r14): the key's output is the summed
-                # numInputRows across the query's progress events —
-                # invariant to batching; still multiple progress events.
-                .option("maxFilesPerTrigger", 2)
-                .option("recursiveFileLookup", "true")
-                .parquet(src)
-                .withWatermark("ts", _WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            qid = str(query.id)
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        query = _run_stream(spark, "w32bd_qlist", windows, _memory_sink())
+        qid = str(query.id)
         # the bus is async: wait for OUR terminated event — ordering
         # guarantees every prior progress event has been delivered
         deadline = time.monotonic() + 30
@@ -2208,42 +1936,20 @@ def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self._f is not None:
                 self._f.close()
 
-    qname = "w32bd_fesink"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): same final-watermark-only output
-            # set as stream_watermark_late (see _run_stream).
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            # coalesce(1) (r14, guide §4 boundary): each NON-EMPTY
-            # (epoch, partition) pays a Python foreach-writer round trip;
-            # the finalized-window rows per epoch are a handful, so 4
-            # write partitions bought nothing but 4x the worker dispatch.
-            # The committed ROW SET is unchanged (per-row sink, read back
-            # and globally ordered).
-            .coalesce(1)
-            .writeStream.foreach(_RowWriter(out))
-            .outputMode("append")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+    # 2 files/trigger (r14): same final-watermark-only output set as
+    # stream_watermark_late (see _file_stream). coalesce(1) (r14, guide
+    # §4 boundary): each NON-EMPTY (epoch, partition) pays a Python
+    # foreach-writer round trip; the finalized-window rows per epoch are
+    # a handful, so 4 write partitions bought nothing but 4x the worker
+    # dispatch. The committed ROW SET is unchanged (per-row sink, read
+    # back and globally ordered).
+    windows = _finalized_windows(
+        _file_stream(spark, src, ev.schema, max_files=2)
+    ).coalesce(1)
+    _run_stream(
+        spark, "w32bd_fesink", windows,
+        lambda w: w.foreach(_RowWriter(out)).outputMode("append"),
+    )
     rows = []
     for entry in sorted(os.listdir(out)):
         if not entry.startswith("fe-"):
@@ -2286,6 +1992,31 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
+def _state_sums(spark: SparkSession, sf_dir: str, src: str) -> DataFrame:
+    """Complete-mode micro-unit sum + count per event_type, 2 chunk files
+    per trigger: the stateful query whose checkpoint the statestore
+    readers open."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        _file_stream(spark, src, ev.schema, max_files=2)
+        .selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
+        .groupBy("event_type")
+        .agg(
+            F.sum("v_micro").alias("state_sum_micro"),
+            F.count(F.lit(1)).alias("state_n"),
+        )
+    )
+
+
+def _checkpointed_complete(ckpt: str):
+    """`_run_stream` sink: complete-mode memory table checkpointed at
+    `ckpt`, so the state store outlives the query."""
+    return lambda w: (
+        w.format("memory").outputMode("complete")
+        .option("checkpointLocation", ckpt)
+    )
+
+
 def _ssread_checkpoint(sf_dir: str) -> str:
     """Canonical checkpoint path for src_statestore_read's one-per-sf
     state build — shared with tests so the naming logic lives in exactly
@@ -2316,37 +2047,10 @@ def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck = _ssread_checkpoint(sf_dir)
 
     def build(tmp: str) -> None:
-        name = "w32bd_ssread"
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        ev = load_table(spark, sf_dir, "events")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
+        _run_stream(
+            spark, "w32bd_ssread", _state_sums(spark, sf_dir, src),
+            _checkpointed_complete(tmp),
         )
-        agg = (
-            stream.selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
-            .groupBy("event_type")
-            .agg(
-                F.sum("v_micro").alias("state_sum_micro"),
-                F.count(F.lit(1)).alias("state_n"),
-            )
-        )
-        with _stream_shuffle(spark):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", tmp)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
 
     build_once(ck, build, stamp=f"chunks={_CHUNKS},micro=1e6,v1")
     # The statestore reader resolves the session's StateStoreCoordinator
@@ -2389,48 +2093,11 @@ _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
-
-
-class _scoped_conf:
-    """Set session confs for a streaming query's lifetime, restore after
-    (unset keys are restored by unsetting — conf.get default sentinel)."""
-
-    def __init__(self, spark: SparkSession, confs: dict):
-        self._spark = spark
-        self._confs = confs
-
-    def __enter__(self):
-        # Snapshot ALL old values before setting ANY (ADVICE r10): if a
-        # later set() raises (invalid/static conf), the except rolls back
-        # the keys already applied so the session is never left half-set.
-        #
-        # conf.get(k) would return the DEFAULT value for an unset key
-        # and the restore would then SET it explicitly — a visible
-        # hygiene change (and a wrong restore if the default ever
-        # differs per-cluster). get(k, None) distinguishes unset.
-        self._old = {k: self._spark.conf.get(k, None) for k in self._confs}
-        applied = []
-        try:
-            for k, v in self._confs.items():
-                self._spark.conf.set(k, v)
-                applied.append(k)
-        except Exception:
-            for k in applied:
-                old = self._old[k]
-                if old is None:
-                    self._spark.conf.unset(k)
-                else:
-                    self._spark.conf.set(k, old)
-            raise
-        return self
-
-    def __exit__(self, *exc):
-        for k, old in self._old.items():
-            if old is None:
-                self._spark.conf.unset(k)
-            else:
-                self._spark.conf.set(k, old)
-        return False
+_ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "true",
+}
 
 
 @register(
@@ -2450,32 +2117,14 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "wm", dup_first=0)
 
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-        )
-
-    with _scoped_conf(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled": "true",
-        },
-    ):
-        # max_files=2 (r14): same final-watermark-only oracle as
-        # stream_watermark_late — see _run_stream.
-        out = _run_stream(
-            spark, src, ev.schema, transform, "w32bd_rocksdb", max_files=2
-        )
-    return out.orderBy("win_start", "event_type")
+    # max_files=2 (r14): same final-watermark-only oracle as
+    # stream_watermark_late — see _file_stream.
+    windows = _finalized_windows(
+        _file_stream(spark, src, ev.schema, max_files=2)
+    )
+    with _scoped_conf(spark, _ROCKSDB_CONFS):
+        _run_stream(spark, "w32bd_rocksdb", windows, _memory_sink())
+    return spark.table("w32bd_rocksdb").orderBy("win_start", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -2550,45 +2199,11 @@ def src_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(tmp: str) -> None:
-        name = "w32bd_ssreadcf"
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        ev = load_table(spark, sf_dir, "events")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        agg = (
-            stream.selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
-            .groupBy("event_type")
-            .agg(
-                F.sum("v_micro").alias("state_sum_micro"),
-                F.count(F.lit(1)).alias("state_n"),
+        with _scoped_conf(spark, _ROCKSDB_CONFS):
+            _run_stream(
+                spark, "w32bd_ssreadcf", _state_sums(spark, sf_dir, src),
+                _checkpointed_complete(tmp),
             )
-        )
-        with _stream_shuffle(spark), _scoped_conf(
-            spark,
-            {
-                "spark.sql.streaming.stateStore.providerClass":
-                    _ROCKSDB_PROVIDER,
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled": "true",
-            },
-        ):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", tmp)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
 
     build_once(ck, build, stamp=f"chunks={_CHUNKS},micro=1e6,rocksdb,v1")
     try:

@@ -83,6 +83,67 @@ CHANGED: dict[str, str] = {
     "iter_gd_logreg": "r14",
     "win_islands_blocked": "r14",
     "iter_als_rank2": "r14",
+    # shared relations cached through common.session_cached / checkpointed
+    "agg_sketch_kmv_intersect": "r14",
+    "win_pareto_abc": "r14",
+    "win_funnel_conversion": "r14",
+    "ns_dedup_ngram_jaccard": "r14",
+    "ns_dedup_minhash": "r14",
+    "ns_dedup_simhash": "r14",
+    "ns_dedup_cluster": "r14",
+    "ns_text_tfidf": "r14",
+    "ns_text_langid": "r14",
+    "ns_text_bm25": "r14",
+    "ns_vocab_coverage": "r14",
+    "ml_naive_bayes": "r14",
+    "ns_dedup_embed_cosine": "r14",
+    "ns_sim_ann_lsh": "r14",
+    "ns_semdedup": "r14",
+    "ml_knn_classify": "r14",
+    "ml_decision_stump": "r14",
+    "ml_gbt_boost2": "r14",
+    "gen_poster_caption": "r14",
+    "sink_binary_export": "r14",
+    "proj_resample_bilinear": "r14",
+    "sink_binary_export_hires": "r14",
+    "sink_binary_export_tiled": "r14",
+    "gen_poster_shadow": "r14",
+    "gen_poster_shadow_blur": "r14",
+    "ns_multimodal_cols": "r14",
+    "ns_mm_decode_meta": "r14",
+    "ns_mm_feature_stub": "r14",
+    "ns_mm_resize": "r14",
+    "ns_mm_frame_sample": "r14",
+    "src_binary_files": "r14",
+    "ns_mm_image_phash": "r14",
+    "ns_mm_scene_cut": "r14",
+    "ns_mm_pipeline_e2e": "r14",
+    "iter_pagerank_tokens": "r14",
+    "iter_connected_components": "r14",
+    "dq_distribution_drift": "r14",
+    "dq_rowcount_anomaly": "r14",
+    "graph_triangle_count": "r14",
+    "graph_bipartite_jaccard": "r14",
+    "graph_resource_alloc": "r14",
+    "graph_clustering_coeff": "r14",
+    "graph_degree_distribution": "r14",
+    "iter_bfs_sssp": "r14",
+    "ts_downsample_lttb": "r14",
+    "ts_autocorr": "r14",
+    "ts_cross_corr": "r14",
+    "ns_text_pmi": "r14",
+    "ns_domain_mix": "r14",
+    "ns_domain_temperature": "r14",
+    "ns_kn_bigram": "r14",
+    "ns_dedup_incremental": "r14",
+    "ns_dedup_incremental_persist": "r14",
+    "ns_ann_knn_join": "r14",
+    "ns_text_perplexity": "r14",
+    "ns_sample_importance": "r14",
+    "ns_dedup_substring": "r14",
+    "ns_decontaminate_bloom": "r14",
+    "ns_pipeline_e2e": "r14",
+    "ns_curriculum_order": "r14",
 }
 
 _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")

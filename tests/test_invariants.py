@@ -1513,8 +1513,10 @@ def test_pandas_on_spark_null_group_keys_match_sql(spark):
 
 def test_local_rows_df_parses_parameterized_ddl_and_checks_arity(spark):
     """local_rows_df takes the DDL through Spark's parser, so a type with
-    commas inside (decimal(10,2), map<…>) stays one field, and a row whose
-    arity differs from the schema raises instead of being truncated."""
+    commas inside (decimal(10,2), map<…>) stays one field, every field is
+    nullable as createDataFrame marks it (even `k`, non-NULL in every
+    row), and a row whose arity differs from the schema raises instead of
+    being truncated."""
     from decimal import Decimal
 
     import pytest
@@ -1527,6 +1529,7 @@ def test_local_rows_df_parses_parameterized_ddl_and_checks_arity(spark):
         "struct<k:string,amount:decimal(10,2),tags:map<string,int>,n:bigint>"
     )
     assert sorted(df.collect()) == [("a", Decimal("12.34"), None, 7), ("b", None, None, None)]
+    assert all(f.nullable for f in df.schema)
     with pytest.raises(ValueError, match="2 values"):
         local_rows_df(spark, ddl, [("a", Decimal("1.00"))])
 
@@ -1553,3 +1556,126 @@ def test_graph_keys_leave_no_temp_views(spark):
     assert after == before
     stems = ("tri_edges", "bip_edges", "gd_data", "isl_edges", "als_r", "als_p")
     assert not [v for v in after if v.startswith(stems)]
+
+
+def test_session_cache_memoizes_per_session_and_evicts_dead_sessions(monkeypatch):
+    """The one cross-pass cache (common.session_cached) builds once per
+    (session, key), holds keys of different modules side by side, and on
+    the first miss under a new applicationId drops every entry of the
+    older session, whatever its key. checkpointed adds only the eager
+    localCheckpoint. Fake sessions: no JVM needed."""
+    from types import SimpleNamespace
+
+    from week3_2_practice_big_data__spark import common
+
+    monkeypatch.setattr(common, "_SESSION_CACHE", {})
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    calls = []
+
+    def build(tag):
+        def run():
+            calls.append(tag)
+            return tag
+        return run
+
+    old = session("app-1")
+    assert common.session_cached(old, ("tok_mat", "sf"), build("tok")) == "tok"
+    assert common.session_cached(old, ("tok_mat", "sf"), build("tok2")) == "tok"
+    assert common.session_cached(old, "cc_graph", build("cc")) == "cc"
+    assert calls == ["tok", "cc"]
+    assert set(common._SESSION_CACHE) == {
+        ("app-1", ("tok_mat", "sf")),
+        ("app-1", "cc_graph"),
+    }
+
+    new = session("app-2")
+    assert common.session_cached(new, ("posters", "sf"), build("poster")) == "poster"
+    assert set(common._SESSION_CACHE) == {("app-2", ("posters", "sf"))}
+    assert common.session_cached(new, ("tok_mat", "sf"), build("tok3")) == "tok3"
+    assert calls == ["tok", "cc", "poster", "tok3"]
+
+    class Rel:
+        def localCheckpoint(self, eager):
+            calls.append(("checkpoint", eager))
+            return "materialized"
+
+    assert common.checkpointed(new, ("kn_bc", "sf"), Rel) == "materialized"
+    assert common.checkpointed(new, ("kn_bc", "sf"), Rel) == "materialized"
+    assert calls[-1] == ("checkpoint", True) and calls.count(("checkpoint", True)) == 1
+
+
+def test_session_cache_keys_are_unique_literals_and_owned_by_common():
+    """Every checkpointed()/session_cached() call in the package names its
+    relation with a key whose first element is a string literal, no two
+    call sites share one (a repeated key would silently return another
+    site's relation from the one shared cache), and outside common.py no
+    module keeps a module-level dict cache or touches the session key
+    (session_key / applicationId)."""
+    import ast
+    import collections
+    import pathlib
+
+    import week3_2_practice_big_data__spark as pkg
+
+    def call_name(node):
+        f = node.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    def literal(key):
+        if isinstance(key, ast.Tuple) and key.elts:
+            key = key.elts[0]
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            return key.value
+        return None
+
+    def dict_state(stmt):
+        """Name of a module-level `X = {}` / `X: dict[...] = dict()`."""
+        if not isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+            return None
+        v = stmt.value
+        empty = (isinstance(v, ast.Dict) and not v.keys) or (
+            isinstance(v, ast.Call)
+            and call_name(v) == "dict"
+            and not (v.args or v.keywords)
+        )
+        t = stmt.targets[0] if isinstance(stmt, ast.Assign) else stmt.target
+        return getattr(t, "id", "?") if empty else None
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites, bad_keys, owned = collections.defaultdict(list), [], []
+    for path in sorted(root.rglob("*.py")):
+        rel, text = str(path.relative_to(root)), path.read_text()
+        tree = ast.parse(text)
+        helper = set()
+        if rel == "common.py":  # checkpointed delegates its caller's key
+            helper = {
+                id(n)
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef) and fn.name == "checkpointed"
+                for n in ast.walk(fn)
+            }
+        else:
+            owned += [f"{rel}: {w}" for w in ("session_key", "applicationId") if w in text]
+            states = {dict_state(stmt) for stmt in tree.body} - {None}
+            if rel == "registry.py":
+                states.discard("REGISTRY")
+            owned += [f"{rel}: {name}" for name in sorted(states)]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and call_name(node) in ("checkpointed", "session_cached")
+                and id(node) not in helper
+            ):
+                name = literal(node.args[1]) if len(node.args) > 1 else None
+                where = f"{rel}:{node.lineno}"
+                if name is None:
+                    bad_keys.append(where)
+                else:
+                    sites[name].append(where)
+    assert bad_keys == []
+    assert {k: v for k, v in sites.items() if len(v) > 1} == {}
+    assert len(sites) >= 40, sorted(sites)  # the scan still finds the call sites
+    assert owned == []

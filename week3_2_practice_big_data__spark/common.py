@@ -162,7 +162,7 @@ def ordered_string_agg(dialect: str, expr: str, sep: str, order_by: str) -> str:
     return f"string_agg({expr}, {sep} ORDER BY {order_by})"
 
 
-def session_key(spark) -> str:
+def _session_key(spark) -> str:
     """Stable cache key for a live SparkSession: the applicationId.
 
     `id(spark)` (the r1–r5 key) is unsafe across session restarts — CPython
@@ -172,28 +172,43 @@ def session_key(spark) -> str:
     return spark.sparkContext.applicationId
 
 
-def checkpointed(cache: dict, key, build):
-    """Materialize-once-per-key: eager localCheckpoint of build()'s result.
+# The one cross-pass cache: (applicationId, key) -> built value.
+_SESSION_CACHE: dict[tuple, object] = {}
+
+
+def session_cached(spark, key, build):
+    """Memoize ``build()`` per live session under ``key``.
+
+    ``key`` names the relation: a string literal (usually the temp view the
+    caller registers), then ``sf_dir`` and any parameter the relation
+    depends on. Literals are unique across call sites, so every module
+    shares this one cache without collisions.
+
+    On a miss, entries of every OTHER session are evicted first (ADVICE
+    r6): one live session at a time is the usage pattern, and without
+    eviction a long-lived process that restarts sessions would keep each
+    dead session's materialized handles forever.
+    """
+    sess = _session_key(spark)
+    if (sess, key) not in _SESSION_CACHE:
+        for k in [k for k in _SESSION_CACHE if k[0] != sess]:
+            del _SESSION_CACHE[k]
+        _SESSION_CACHE[sess, key] = build()
+    return _SESSION_CACHE[sess, key]
+
+
+def checkpointed(spark, key, build):
+    """Materialize-once-per-session: eager localCheckpoint of build()'s
+    result, cached by ``session_cached`` (which owns the session key and
+    the eviction; callers only name the relation).
 
     The ONE sanctioned pattern for relations consumed multiple times via a
     temp view: persist()+view silently misses Spark's cache for plans
     containing collect_list (flagged nondeterministic) or higher-order
     lambdas (canonicalization fails), re-deriving the relation per
-    reference — an RDD-backed checkpoint cannot miss. Callers key by
-    (session_key(spark), sf_dir) for sf-dependent relations,
-    session_key(spark) otherwise.
-
-    On a miss, entries keyed to OTHER sessions are evicted first (ADVICE
-    r6): one live session at a time is the usage pattern, and without
-    eviction a long-lived process that restarts sessions would leak each
-    dead session's eagerly-materialized checkpoints forever.
+    reference — an RDD-backed checkpoint cannot miss.
     """
-    if key not in cache:
-        sess = key[0] if isinstance(key, tuple) else key
-        for k in [k for k in cache if (k[0] if isinstance(k, tuple) else k) != sess]:
-            del cache[k]
-        cache[key] = build().localCheckpoint(eager=True)
-    return cache[key]
+    return session_cached(spark, key, lambda: build().localCheckpoint(eager=True))
 
 
 def local_rows_df(spark, schema_ddl: str, rows):
@@ -207,9 +222,10 @@ def local_rows_df(spark, schema_ddl: str, rows):
     worker, so every pass re-spawned one). Building the same rows as
     literal columns over ``spark.range(1)`` + UNION keeps the relation
     JVM-only (~0.08 s per action) — same values, same column names and
-    types. Nullability differs: a column that is non-NULL in every row
-    comes out non-nullable despite the ``when(True, …)`` wrapper (seen on
-    Spark 4.1), where createDataFrame marks every DDL field nullable.
+    types. Every field is nullable, as createDataFrame marks them: the
+    union starts from the zero-row relation of all-NULL literals (a
+    literal-only branch whose values are never NULL would make Spark 4.1
+    mark its column non-nullable).
 
     Scalars only (int/float/str/bool/None/Decimal); use createDataFrame
     for anything nested or larger than a few hundred rows. Spark parses
@@ -217,7 +233,13 @@ def local_rows_df(spark, schema_ddl: str, rows):
     differs from the schema's raises ``ValueError``.
     """
     fields = [(f.name, f.dataType) for f in _parse_datatype_string(schema_ddl).fields]
-    out = None
+    out = (
+        spark.range(1)
+        .select(
+            *[F.when(F.lit(True), F.lit(None).cast(t)).alias(n) for n, t in fields]
+        )
+        .limit(0)
+    )
     for row in rows:
         if len(row) != len(fields):
             raise ValueError(
@@ -228,17 +250,5 @@ def local_rows_df(spark, schema_ddl: str, rows):
             F.when(F.lit(True), F.lit(v).cast(t)).alias(n)
             for (n, t), v in zip(fields, row)
         ]
-        df = spark.range(1).select(*cols)
-        out = df if out is None else out.unionAll(df)
-    if out is None:  # zero rows: empty relation with the right schema
-        out = (
-            spark.range(1)
-            .select(
-                *[
-                    F.when(F.lit(True), F.lit(None).cast(t)).alias(n)
-                    for n, t in fields
-                ]
-            )
-            .limit(0)
-        )
+        out = out.unionAll(spark.range(1).select(*cols))
     return out

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import checkpointed, ordered_string_agg, session_key
+from ..common import checkpointed, ordered_string_agg
 from ..io import register_views
 from ..registry import register
 from .text import (
@@ -177,6 +177,19 @@ GROUP BY d.source
 """
 
 
+def _domain_src(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize _domain_src_sql once per (session, sf) as view
+    `domain_src` — shared by ns_domain_mix and ns_domain_temperature —
+    and return a SQL ref to it."""
+    register_views(spark, sf_dir, ("documents",))
+    checkpointed(
+        spark,
+        ("domain_src", sf_dir.rstrip("/")),
+        lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
+    ).createOrReplaceTempView("domain_src")
+    return "SELECT source, n_docs, n_tokens FROM domain_src"
+
+
 def _domain_mix_sql(dialect: str, per_src_ref: str | None = None) -> str:
     share = "per_src.n_tokens / (tot.t + 0e0)"
     # per_src is the corpus tokenize+aggregate (LEFT JOIN inside so a
@@ -207,19 +220,8 @@ ORDER BY per_src.source
     tags=("ns", "text", "sampling"),
 )
 def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
-    register_views(spark, sf_dir, ("documents",))
-    checkpointed(
-        _DOMAIN_SRC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
-    ).createOrReplaceTempView("domain_src")
     return spark.sql(
-        _domain_mix_sql(
-            "spark",
-            per_src_ref="SELECT source, n_docs, n_tokens FROM domain_src",
-        )
+        _domain_mix_sql("spark", per_src_ref=_domain_src(spark, sf_dir))
     )
 
 
@@ -265,9 +267,6 @@ ORDER BY s.tau, s.source
 """
 
 
-_DOMAIN_SRC_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_domain_temperature",
     oracle=_domain_temperature_sql("duckdb"),
@@ -279,19 +278,8 @@ _DOMAIN_SRC_CACHE: dict[tuple, DataFrame] = {}
     tags=("ns", "sampling", "text"),
 )
 def ns_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
-    register_views(spark, sf_dir, ("documents",))
-    checkpointed(
-        _DOMAIN_SRC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
-    ).createOrReplaceTempView("domain_src")
     return spark.sql(
-        _domain_temperature_sql(
-            "spark",
-            per_src_ref="SELECT source, n_docs, n_tokens FROM domain_src",
-        )
+        _domain_temperature_sql("spark", per_src_ref=_domain_src(spark, sf_dir))
     )
 
 
@@ -308,7 +296,6 @@ def ns_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KN_TOP = 50
-_KN_BC_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _kn_bc_sql(dialect: str) -> str:
@@ -384,12 +371,10 @@ LIMIT {_KN_TOP}
     tags=("ns", "text", "statml"),
 )
 def ns_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     register_views(spark, sf_dir, ("documents",))
     checkpointed(
-        _KN_BC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("kn_bc", sf_dir.rstrip("/")),
         lambda: spark.sql(_kn_bc_sql("spark")).coalesce(8),
     ).createOrReplaceTempView("kn_bc")
     return spark.sql(
@@ -986,9 +971,6 @@ ORDER BY doc_id
 """
 
 
-_PPL_DOC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, nll) materialized once per (session, sf) — the
     blocked-ntile tail consumes it twice, and CTE inlining would re-run
@@ -998,8 +980,8 @@ def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, ("documents",))
     return checkpointed(
-        _PPL_DOC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("ppl_doc", sf_dir.rstrip("/")),
         lambda: spark.sql(
             _perplexity_doc_sql("spark", cached_tokens_ref(spark, sf_dir))
         ).coalesce(8),
@@ -1107,9 +1089,6 @@ ORDER BY doc_id
 """
 
 
-_IMP_Q_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_sample_importance",
     oracle=_importance_sql("duckdb"),
@@ -1128,8 +1107,8 @@ def ns_sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from both the bucket-count and the rank CTE, and inlining would
     # re-run the regex scoring scan per reference.
     q = checkpointed(
-        _IMP_Q_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("imp_q", sf_dir.rstrip("/")),
         lambda: spark.sql(
             f"SELECT doc_id, quality FROM ({_quality_sql('spark')}) qq"
         ).coalesce(8),
@@ -1256,9 +1235,6 @@ ORDER BY n_shared_spans DESC, da, db
 """
 
 
-_SUBSTR_SD_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_dedup_substring",
     oracle=_substring_sql("duckdb"),
@@ -1273,12 +1249,9 @@ _SUBSTR_SD_CACHE: dict[tuple, DataFrame] = {}
     tags=("ns", "dedup", "text"),
 )
 def ns_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     register_views(spark, sf_dir, ("documents",))
-    key = (session_key(spark), sf_dir.rstrip("/"))
     checkpointed(
-        _SUBSTR_SD_CACHE, key,
+        spark, ("substr_sd", sf_dir.rstrip("/")),
         lambda: spark.sql(_substring_sd_sql("spark")).coalesce(8),
     ).createOrReplaceTempView("substr_sd")
     # the doc→rep map is the SHARED materialization (functions.text)
@@ -1860,7 +1833,6 @@ def ns_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BLOOM_M = 65536  # bits
-_BLOOM_NG_CACHE: dict = {}
 
 
 def _cached_bloom_ng(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1869,8 +1841,8 @@ def _cached_bloom_ng(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination stage (ns_pipeline_e2e, r8)."""
     register_views(spark, sf_dir, ("documents",))
     return checkpointed(
-        _BLOOM_NG_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("bloom_ng", sf_dir.rstrip("/")),
         lambda: spark.sql(_ngram_sql("spark")).coalesce(8),
     )
 
@@ -2566,11 +2538,6 @@ def _pipeline_v2_oracle_sql() -> str:
     )
 
 
-_PIPE_FLAGS_CACHE: dict[tuple, DataFrame] = {}
-_PIPE_S4_CACHE: dict[tuple, DataFrame] = {}
-_PIPE_DOC2_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_pipeline_e2e",
     oracle=_pipeline_v2_oracle_sql(),
@@ -2593,13 +2560,13 @@ def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _cached_minhash_pairs, cached_rep_map_ref
 
     register_views(spark, sf_dir, ("documents",))
-    key = (session_key(spark), sf_dir.rstrip("/"))
+    sf = sf_dir.rstrip("/")
     rep_ref = cached_rep_map_ref(spark, sf_dir)
     _cached_minhash_pairs(spark, sf_dir).createOrReplaceTempView(
         "minhash_pairs"
     )
     checkpointed(
-        _PIPE_FLAGS_CACHE, key,
+        spark, ("pipe_flags", sf),
         lambda: spark.sql(
             _pipe_flags_sql(
                 "spark", rep_ref=rep_ref,
@@ -2609,7 +2576,7 @@ def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).createOrReplaceTempView("pipe_flags")
     _cached_ppl_doc(spark, sf_dir).createOrReplaceTempView("ppl_doc")
     checkpointed(
-        _PIPE_S4_CACHE, key,
+        spark, ("pipe_s4", sf),
         lambda: spark.sql(
             _pipe_s4_sql(
                 "spark", "SELECT * FROM pipe_flags",
@@ -2619,7 +2586,7 @@ def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).createOrReplaceTempView("pipe_s4")
     _cached_bloom_ng(spark, sf_dir).createOrReplaceTempView("bloom_ng")
     checkpointed(
-        _PIPE_DOC2_CACHE, key,
+        spark, ("pipe_doc2", sf),
         lambda: spark.sql(
             _pipe_doc2_sql(
                 "spark", "SELECT * FROM pipe_s4",
@@ -2653,7 +2620,6 @@ def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CURR_SHARD = 64  # docs per shard (ns_global_shuffle's constant)
-_CURR_PB_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _curriculum_sql(
@@ -2723,8 +2689,8 @@ def ns_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per reference (r8 plan audit: 2 documents scans) — materialize once.
     register_views(spark, sf_dir, ("documents",))
     checkpointed(
-        _CURR_PB_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("curr_pb", sf_dir.rstrip("/")),
         lambda: spark.sql(
             "SELECT doc_id, z, CAST(floor(z * 16e0) AS BIGINT) AS pb FROM ("
             + _qc_scored_sql("spark")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import load_table, register_views
 from ..registry import register
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from .. import synth
 
 _DIM = 64
@@ -206,9 +206,6 @@ GROUP BY vec_id, {band}
 """
 
 
-_BAND_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_band_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band signatures persisted per (session, sf): both consumers reference
     the relation twice (self-join sides / corpus+query probe) and Catalyst
@@ -218,7 +215,7 @@ def _cached_band_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(_band_sig_sql("spark")).coalesce(4)
 
-    return checkpointed(_BAND_SIG_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, ("embeddings_band_sig", sf_dir.rstrip("/")), build)
 
 
 def _band_sig_ref(dialect: str) -> str:
@@ -239,15 +236,12 @@ def _emb_norm_sql(dialect: str, rel: str = "embeddings", label: bool = True) -> 
     return f"SELECT {cols}, sqrt({na}) AS nrm FROM {rel}"
 
 
-_EMB_NORM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(_emb_norm_sql("spark")).coalesce(4)
 
-    return checkpointed(_EMB_NORM_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, ("embeddings_norm", sf_dir.rstrip("/")), build)
 
 
 def _emb_norm_ref(dialect: str) -> str:
@@ -354,24 +348,19 @@ def _embed_pairs_oracle() -> str:
     )
 
 
-_CELLS_CACHE: dict[tuple, DataFrame] = {}
-_REP_CACHE: dict[tuple, DataFrame] = {}
-_REP_SIG_CACHE: dict[tuple, DataFrame] = {}
-_REP_NORM_CACHE: dict[tuple, DataFrame] = {}
-_GM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _rep_views(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the representative relations once per (session, sf):
     reps, rep band signatures, rep norms, and the member→rep map — every
     one is consumed at least twice by the pair plan."""
-    key = (session_key(spark), sf_dir.rstrip("/"))
+    sf = sf_dir.rstrip("/")
 
     def reps():
         register_views(spark, sf_dir, ("embeddings",))
         return spark.sql(_rep_sql("spark")).coalesce(4)
 
-    checkpointed(_REP_CACHE, key, reps).createOrReplaceTempView("embeddings_reps")
+    checkpointed(spark, ("embeddings_reps", sf), reps).createOrReplaceTempView(
+        "embeddings_reps"
+    )
 
     def sig():
         return spark.sql(_band_sig_sql("spark", rel="embeddings_reps")).coalesce(4)
@@ -387,9 +376,13 @@ def _rep_views(spark: SparkSession, sf_dir: str) -> None:
             _gm_sql("spark", "SELECT vec_id, embedding FROM embeddings_reps")
         ).coalesce(4)
 
-    checkpointed(_REP_SIG_CACHE, key, sig).createOrReplaceTempView("reps_band_sig")
-    checkpointed(_REP_NORM_CACHE, key, norm).createOrReplaceTempView("reps_norm")
-    checkpointed(_GM_CACHE, key, gm).createOrReplaceTempView("embeddings_gm")
+    checkpointed(spark, ("reps_band_sig", sf), sig).createOrReplaceTempView(
+        "reps_band_sig"
+    )
+    checkpointed(spark, ("reps_norm", sf), norm).createOrReplaceTempView("reps_norm")
+    checkpointed(spark, ("embeddings_gm", sf), gm).createOrReplaceTempView(
+        "embeddings_gm"
+    )
 
 
 @register(
@@ -739,14 +732,14 @@ ORDER BY cl.vec_id
 def ns_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("embeddings",))
     _rep_views(spark, sf_dir)
-    key = (session_key(spark), sf_dir.rstrip("/"))
 
     def cells():
         return spark.sql(
             f"WITH {_ivf_assign_ctes('spark')} SELECT vec_id, cell FROM cells"
         ).coalesce(4)
 
-    checkpointed(_CELLS_CACHE, key, cells).createOrReplaceTempView(
+    sf = sf_dir.rstrip("/")
+    checkpointed(spark, ("embeddings_cells", sf), cells).createOrReplaceTempView(
         "embeddings_cells"
     )
     return spark.sql(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import register_views
 from ..registry import register
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from .. import synth
 
 _P = 2_147_483_647  # hash modulus (2^31-1)
@@ -38,8 +38,6 @@ _REP_MAP_SQL = (
     "SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS rep "
     "FROM documents"
 )
-_TOK_MAT_CACHE: dict[tuple, "DataFrame"] = {}
-_REP_MAP_CACHE: dict[tuple, "DataFrame"] = {}
 
 
 def cached_tokens_ref(spark: SparkSession, sf_dir: str) -> str:
@@ -52,7 +50,7 @@ def cached_tokens_ref(spark: SparkSession, sf_dir: str) -> str:
     the shared oracle text was always single-pass."""
     register_views(spark, sf_dir, ("documents",))
     checkpointed(
-        _TOK_MAT_CACHE, (session_key(spark), sf_dir.rstrip("/")),
+        spark, ("tok_mat", sf_dir.rstrip("/")),
         lambda: spark.sql(tokens_sql("spark")).coalesce(8),
     ).createOrReplaceTempView("tok_mat")
     return "SELECT doc_id, pos, token FROM tok_mat"
@@ -65,7 +63,7 @@ def cached_rep_map_ref(spark: SparkSession, sf_dir: str) -> str:
     scans + text-partition windows)."""
     register_views(spark, sf_dir, ("documents",))
     checkpointed(
-        _REP_MAP_CACHE, (session_key(spark), sf_dir.rstrip("/")),
+        spark, ("rep_map", sf_dir.rstrip("/")),
         lambda: spark.sql(_REP_MAP_SQL).coalesce(8),
     ).createOrReplaceTempView("rep_map")
     return "SELECT doc_id, rep FROM rep_map"
@@ -196,9 +194,6 @@ SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep ON sh0.shingle = keep.shingle
 """
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capped rep-shingle index materialized per (session, sf): the
     Jaccard stage references it three times (inverted-index self-join +
@@ -207,7 +202,7 @@ def _cached_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir, ("documents",))
         return spark.sql(_capped_shingles_sql("spark")).coalesce(4)
 
-    return checkpointed(_SHINGLE_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, ("capped_shingles", sf_dir.rstrip("/")), build)
 
 
 def _jaccard_sql(
@@ -332,9 +327,6 @@ GROUP BY doc_id, hp.i
 """
 
 
-_MINHASH_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_minhash_sig(
     spark: SparkSession, sf_dir: str, where: str = ""
 ) -> DataFrame:
@@ -346,9 +338,7 @@ def _cached_minhash_sig(
         register_views(spark, sf_dir, ("documents",))
         return spark.sql(_minhash_sig_sql("spark", where)).coalesce(4)
 
-    return checkpointed(
-        _MINHASH_SIG_CACHE, (session_key(spark), sf_dir.rstrip("/"), where), build
-    )
+    return checkpointed(spark, ("minhash_sig", sf_dir.rstrip("/"), where), build)
 
 
 def _minhash_sql(
@@ -545,9 +535,6 @@ ORDER BY hamming, ai, bi
 """
 
 
-_SIMHASH_FP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_simhash_fp(
     spark: SparkSession, sf_dir: str, where: str = ""
 ) -> DataFrame:
@@ -560,9 +547,7 @@ def _cached_simhash_fp(
         register_views(spark, sf_dir, ("documents",))
         return spark.sql(_simhash_fp_sql("spark", where)).coalesce(4)
 
-    return checkpointed(
-        _SIMHASH_FP_CACHE, (session_key(spark), sf_dir.rstrip("/"), where), build
-    )
+    return checkpointed(spark, ("simhash_fp", sf_dir.rstrip("/"), where), build)
 
 
 @register(
@@ -682,9 +667,6 @@ ORDER BY cluster
     return "".join(parts)
 
 
-_MINHASH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confirmed minhash pairs persisted per (session, sf): every label-
     propagation round references the edge list, and Catalyst inlines CTEs —
@@ -701,7 +683,7 @@ def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).coalesce(2)
 
-    return checkpointed(_MINHASH_PAIRS_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, ("minhash_pairs", sf_dir.rstrip("/")), build)
 
 
 @register(

@@ -31,7 +31,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from ..io import register_views
 from ..registry import register
 
@@ -60,7 +60,6 @@ def _scoped_view(df: DataFrame, stem: str):
 
 _GD_STEPS = 3
 _GD_LR = "1e0"
-_GD_DATA_CACHE: dict[tuple, object] = {}
 
 
 def _gd_grad(j_expr: str) -> str:
@@ -137,8 +136,8 @@ def iter_gd_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached-training-set shape distributed SGD assumes.
     register_views(spark, sf_dir, ("lineitem",))
     data = checkpointed(
-        _GD_DATA_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("gd_data", sf_dir.rstrip("/")),
         lambda: spark.sql(_GD_DATA_SQL),
     )
     with _scoped_view(data, "gd_data") as view:
@@ -387,9 +386,6 @@ ORDER BY range_start
 """
 
 
-_ISL_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "win_islands_blocked",
     oracle=_islands_sql("duckdb"),
@@ -406,9 +402,7 @@ def win_islands_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         return spark.sql(_islands_edges_sql()).coalesce(8)
 
-    edges = checkpointed(
-        _ISL_EDGE_CACHE, (session_key(spark), sf_dir.rstrip("/")), build
-    )
+    edges = checkpointed(spark, ("isl_edges", sf_dir.rstrip("/")), build)
     with _scoped_view(edges, "isl_edges") as view:
         return spark.sql(
             _islands_blocked_sql(f"SELECT b, s, e, lflush, rflush FROM {view}")
@@ -603,16 +597,13 @@ LIMIT 20
 """
 
 
-_TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oriented token co-occurrence edge list, checkpointed once per
     (session, sf_dir) and shared by the triangle-family keys."""
     register_views(spark, sf_dir, ("documents",))
     return checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("tri_edges", sf_dir.rstrip("/")),
         lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
     )
 
@@ -718,16 +709,13 @@ LIMIT 100
 """
 
 
-_BIP_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _bip_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The part–supplier edge list, checkpointed once per (session,
     sf_dir) and shared by the bipartite-graph keys."""
     register_views(spark, sf_dir, ("lineitem",))
     return checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("bip_edges", sf_dir.rstrip("/")),
         lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
     )
 
@@ -1077,8 +1065,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ALS_LAMBDA = "0.1e0"
-_ALS_R_CACHE: dict[tuple, DataFrame] = {}
-_ALS_P_CACHE: dict[tuple, DataFrame] = {}
 
 _ALS_RATINGS_SQL = """
 SELECT o.o_custkey AS u, l.l_partkey AS i,
@@ -1168,15 +1154,15 @@ JOIN qn q ON q.i = r.i
 )
 def iter_als_rank2(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem", "orders"))
-    key = (session_key(spark), sf_dir.rstrip("/"))
+    sf = sf_dir.rstrip("/")
     ratings = checkpointed(
-        _ALS_R_CACHE, key, lambda: spark.sql(_ALS_RATINGS_SQL).coalesce(8)
+        spark, ("als_r", sf), lambda: spark.sql(_ALS_RATINGS_SQL).coalesce(8)
     )
     with _scoped_view(ratings, "als_r") as r_view:
         r_ref = f"SELECT u, i, rt FROM {r_view}"
         users = checkpointed(
-            _ALS_P_CACHE,
-            key,
+            spark,
+            ("als_p", sf),
             lambda: spark.sql(_als_user_step_sql(r_ref)).coalesce(4),
         )
         with _scoped_view(users, "als_p") as p_view:

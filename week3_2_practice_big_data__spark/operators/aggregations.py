@@ -998,9 +998,6 @@ ORDER BY type_a, type_b
 """
 
 
-_KMV_D_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "agg_sketch_kmv_intersect",
     oracle=_kmv_sql("duckdb"),
@@ -1016,11 +1013,11 @@ _KMV_D_CACHE: dict[tuple, DataFrame] = {}
 )
 def agg_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    from ..common import checkpointed, session_key
+    from ..common import checkpointed
 
     checkpointed(
-        _KMV_D_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("kmv_d", sf_dir.rstrip("/")),
         lambda: spark.sql(_KMV_D_SQL).coalesce(8),
     ).createOrReplaceTempView("kmv_d")
     return spark.sql(_kmv_sql("spark", d_ref="SELECT t, u FROM kmv_d"))

@@ -131,9 +131,6 @@ SELECT stage, n_users FROM (
 """
 
 
-_FUNNEL_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "win_funnel_conversion",
     oracle=_funnel_sql("duckdb"),
@@ -144,16 +141,15 @@ _FUNNEL_CACHE: dict[tuple, DataFrame] = {}
     tags=("window", "analytics"),
 )
 def win_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
+    from ..common import checkpointed
 
     register_views(spark, sf_dir, ("events",))
-    key = (session_key(spark), sf_dir.rstrip("/"))
     refs = {}
     prev = None
     for name, stage in (("v", "view"), ("c", "click"), ("p", "purchase")):
         sql = _funnel_stage_sql("spark", stage, prev)
         checkpointed(
-            _FUNNEL_CACHE, key + (name,),
+            spark, ("funnel", sf_dir.rstrip("/"), name),
             lambda q=sql: spark.sql(q).coalesce(4),
         ).createOrReplaceTempView(f"funnel_{name}")
         refs[name] = prev = f"SELECT user_id, t FROM funnel_{name}"

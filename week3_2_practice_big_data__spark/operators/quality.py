@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import _us, checkpointed, session_key
+from ..common import _us, checkpointed
 from ..io import load_table, register_views
 from ..registry import register
 
@@ -255,7 +255,6 @@ def src_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DRIFT_B = 16
-_DRIFT_HIST_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _drift_hist_sql(dialect: str) -> str:
@@ -333,8 +332,8 @@ ORDER BY event_type
 def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     checkpointed(
-        _DRIFT_HIST_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("drift_hist", sf_dir.rstrip("/")),
         lambda: spark.sql(_drift_hist_sql("spark")).coalesce(1),
     ).createOrReplaceTempView("drift_hist")
     return spark.sql(
@@ -410,8 +409,6 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (CTE inlining would re-run the events scan per reference).
 # ---------------------------------------------------------------------------
 
-_RC_DAILY_CACHE: dict[tuple, DataFrame] = {}
-
 
 def _rowcount_daily_sql(dialect: str) -> str:
     us = _us(dialect)
@@ -461,8 +458,8 @@ ORDER BY d.day
 def dq_rowcount_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("events",))
     checkpointed(
-        _RC_DAILY_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("rc_daily", sf_dir.rstrip("/")),
         lambda: spark.sql(_rowcount_daily_sql("spark")).coalesce(1),
     ).createOrReplaceTempView("rc_daily")
     return spark.sql(

@@ -472,9 +472,6 @@ ORDER BY user_id, bkt, kind
 """
 
 
-_LTTB_EV_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ts_downsample_lttb",
     oracle=_lttb_sql("duckdb"),
@@ -487,12 +484,12 @@ _LTTB_EV_CACHE: dict[tuple, DataFrame] = {}
     tags=("timeseries", "window", "sampling"),
 )
 def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
+    from ..common import checkpointed
 
     register_views(spark, sf_dir, ("events",))
     checkpointed(
-        _LTTB_EV_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("lttb_ev", sf_dir.rstrip("/")),
         lambda: spark.sql(_lttb_ev_sql("spark")).coalesce(8),
     ).createOrReplaceTempView("lttb_ev")
     return spark.sql(
@@ -671,9 +668,6 @@ ORDER BY lag_k
 """
 
 
-_ACF_ORDERED_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ts_autocorr",
     oracle=_autocorr_sql("duckdb"),
@@ -688,12 +682,12 @@ _ACF_ORDERED_CACHE: dict[tuple, DataFrame] = {}
     tags=("timeseries", "stats", "window"),
 )
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
+    from ..common import checkpointed
 
     register_views(spark, sf_dir, ("events",))
     checkpointed(
-        _ACF_ORDERED_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("acf_ordered", sf_dir.rstrip("/")),
         lambda: spark.sql(_acf_ordered_sql("spark")).coalesce(1),
     ).createOrReplaceTempView("acf_ordered")
     return spark.sql(
@@ -816,9 +810,6 @@ ORDER BY lag_k
 """
 
 
-_CCF_DAILY_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ts_cross_corr",
     oracle=_cross_corr_sql("duckdb"),
@@ -831,12 +822,12 @@ _CCF_DAILY_CACHE: dict[tuple, DataFrame] = {}
     tags=("timeseries", "stats"),
 )
 def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
+    from ..common import checkpointed
 
     register_views(spark, sf_dir, ("events",))
     checkpointed(
-        _CCF_DAILY_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("ccf_daily", sf_dir.rstrip("/")),
         lambda: spark.sql(_ccf_daily_sql("spark")).coalesce(1),
     ).createOrReplaceTempView("ccf_daily")
     return spark.sql(

@@ -530,7 +530,6 @@ def win_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ABC_P = 1_000_003
-_ABC_PR_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _pareto_rev_sql() -> str:
@@ -613,12 +612,12 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-part revenue relation feeds both the bucket-summary chain
     # and the rank join; CTE inlining would scan lineitem once per
     # reference (r8 plan audit: 2 scans) — materialize it once.
-    from ..common import checkpointed, session_key
+    from ..common import checkpointed
 
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     checkpointed(
-        _ABC_PR_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark,
+        ("abc_pr", sf_dir.rstrip("/")),
         lambda: spark.sql(_pareto_rev_sql()).coalesce(8),
     ).createOrReplaceTempView("abc_pr")
     return spark.sql(

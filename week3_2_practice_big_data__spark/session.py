@@ -27,8 +27,7 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # switch this decides from MEASURED partition sizes, so it cannot OOM on
 # a bad estimate and is scale-safe: at 100 TB the big joins' partitions
 # exceed the threshold and stay sort-merge. 64 MB per-partition build is
-# conservative for any executor sized per guide §5; env-overridable for
-# deployments that want it off (0) or larger.
+# conservative for any executor sized per guide §5.
 #
 # Ordering audit (ADVICE r13): rewriting SMJ->SHJ changes INTRA-PARTITION
 # row order for any join without a final sort. Audited r14: every oracle
@@ -39,7 +38,7 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # r1; the r13 single-pass rewrites moved those sorts BELOW Python nodes
 # but never removed them). No key relies on SMJ's incidental key-sorted
 # partition order.
-_SHJ_THRESHOLD = os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024))
+_SHJ_THRESHOLD = str(64 * 1024 * 1024)
 
 
 def get_spark(app_name: str = "w32bd-spark-engine") -> SparkSession:
